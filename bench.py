@@ -92,7 +92,6 @@ def _rectify_df(spark, w, h, tw, th, y0, res_scale=1.0,
         (F.lit(60.0) - (0.01 / sc) * F.col("j")
          + (0.002 / sc) * F.col("i")).alias("y"),
         F.col("value").alias("val_0"),
-        F.lit(True).alias("pres_0"),
     )
     target_gm = GridMapping.regular(
         (tw, th), (0.0, float(y0)), 0.0125 / sc, CRS_WGS84

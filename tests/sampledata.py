@@ -173,3 +173,24 @@ def create_4x4_dataset_with_irregular_coords(spark) -> SparkDataset:
         coords={"lon": lon, "lat": lat},
         yx_dims=("y", "x"),
     )
+
+
+def long_pixels_df(spark, base, num_t, nan_px, null_px, absent_px):
+    """Long (t, j, i, value) rows of a num_t-plane stack, plane t = base + t.
+
+    Built from Python tuples, because pandas would turn the genuine NaN
+    into a SQL NULL.  Every plane has a genuine NaN at pixel ``nan_px``
+    and a SQL NULL at ``null_px``; the last plane has no row at the
+    ``absent_px`` pixels.
+    """
+    h, w = base.shape
+    rows = [
+        (t, j, i, None if (j, i) == null_px
+         else float("nan") if (j, i) == nan_px
+         else float(base[j, i] + t))
+        for t in range(num_t)
+        for j in range(h)
+        for i in range(w)
+        if t < num_t - 1 or (j, i) not in absent_px
+    ]
+    return spark.createDataFrame(rows, "t int, j int, i int, value double")

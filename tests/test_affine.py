@@ -14,6 +14,7 @@ from xcube_resampling_spark.operators.affine import affine_transform_dataset
 from .sampledata import (
     create_2x8x6_dataset_with_regular_coords,
     create_8x6_dataset_with_regular_coords,
+    long_pixels_df,
 )
 
 RES = 0.1
@@ -234,32 +235,23 @@ class TestAffineGoldens:
 
 class TestGatherFused:
     """gather_fused is the single-shuffle block-local twin of _gather;
-    must be value-identical including NaN data, SQL-NULL (absent) pixels,
-    numeric fills, negative scales, positional index maps, and must emit
-    real NaNs (not SQL NULLs) like the join path does."""
+    must be value-identical at every num_t, including genuine-NaN data,
+    SQL-NULL and absent pixels, numeric fills, negative scales,
+    positional index maps, and must emit real NaNs (not SQL NULLs) like
+    the join path does."""
 
-    def _src(self, spark):
-        import pandas as pd
-
+    @pytest.fixture(scope="class", params=[1, 3, 63])
+    def src(self, spark, request):
         rng = np.random.default_rng(9)
         src_w, src_h = 30, 24
-        jj, ii = np.meshgrid(
-            np.arange(src_h), np.arange(src_w), indexing="ij"
+        absent = {(10, 10), (11, 10), (12, 3)}
+        df = long_pixels_df(
+            spark, rng.normal(size=(src_h, src_w)), request.param,
+            nan_px=(3, 4), null_px=(7, 20), absent_px=absent,
         )
-        val = rng.normal(size=jj.shape)
-        val[3, 4] = np.nan
-        pdf = pd.DataFrame(
-            {
-                "t": np.zeros(jj.size, "int32"),
-                "j": jj.ravel().astype("int32"),
-                "i": ii.ravel().astype("int32"),
-                "value": val.ravel(),
-            }
-        )
-        pdf = pdf[~((pdf.j == 10) & (pdf.i == 10))]
-        return spark.createDataFrame(pdf), (src_w, src_h)
+        return df, (src_w, src_h), request.param
 
-    def _compare(self, spark, matrix4, gsize, interp, rec, fill,
+    def _compare(self, spark, src, matrix4, gsize, interp, rec, fill,
                  idx_map=(1, 1, 0, 0)):
         from pyspark.sql import functions as F
 
@@ -269,9 +261,9 @@ class TestGatherFused:
             gather_fused,
         )
 
-        src, src_size = self._src(spark)
+        src_df, src_size, num_t = src
         w, h = gsize
-        grid = grid_df(spark, w, h, 1)
+        grid = grid_df(spark, w, h, num_t)
         idx_cols = ("j", "i")
         if idx_map != (1, 1, 0, 0):
             k_j, k_i, p_j, p_i = idx_map
@@ -282,39 +274,44 @@ class TestGatherFused:
             )
             idx_cols = ("jj", "ii")
         ref = _gather(
-            grid, src, matrix4, src_size, interp, rec, fill, idx_cols
+            grid, src_df, matrix4, src_size, interp, rec, fill, idx_cols
         ).toPandas().sort_values(["t", "j", "i"]).reset_index(drop=True)
         got_df = gather_fused(
-            spark, src, matrix4, src_size, gsize, 1, interp, rec, fill,
-            idx_map, block_rows=7,
+            spark, src_df, matrix4, src_size, gsize, num_t, interp, rec,
+            fill, idx_map, block_rows=7,
         )
         assert got_df.filter(F.col("value").isNull()).count() == 0
         got = got_df.toPandas().sort_values(
             ["t", "j", "i"]
         ).reset_index(drop=True)
+        assert len(ref) == len(got) == num_t * w * h
         a = ref["value"].to_numpy()
         b = got["value"].to_numpy()
         same = (np.isnan(a) & np.isnan(b)) | (a == b)
         assert same.all(), int((~same).sum())
 
-    def test_upscale_bilinear(self, spark):
-        self._compare(spark, (0.5, -0.25, 0.5, -0.25), (60, 48), 1, False,
-                      float("nan"))
+    def test_upscale_bilinear(self, spark, src):
+        self._compare(spark, src, (0.5, -0.25, 0.5, -0.25), (60, 48), 1,
+                      False, float("nan"))
 
-    def test_shift_nearest_numeric_fill(self, spark):
-        self._compare(spark, (1.0, 5.5, 1.0, -3.5), (30, 24), 0, False,
-                      -999.0)
+    def test_shift_nearest_numeric_fill(self, spark, src):
+        self._compare(spark, src, (1.0, 5.5, 1.0, -3.5), (30, 24), 0,
+                      False, -999.0)
 
-    def test_negative_j_scale(self, spark):
-        self._compare(spark, (1.0, 0.0, -1.0, 23.0), (30, 24), 1, False,
-                      float("nan"))
+    def test_bilinear_numeric_fill(self, spark, src):
+        self._compare(spark, src, (0.5, -0.25, 0.5, -0.25), (60, 48), 1,
+                      False, -999.0)
 
-    def test_recover_nan(self, spark):
-        self._compare(spark, (0.5, -0.25, 0.5, -0.25), (60, 48), 1, True,
-                      float("nan"))
+    def test_negative_j_scale(self, spark, src):
+        self._compare(spark, src, (1.0, 0.0, -1.0, 23.0), (30, 24), 1,
+                      False, float("nan"))
 
-    def test_positional_index_map(self, spark):
-        self._compare(spark, (0.3, 0.0, 0.3, 0.0), (10, 8), 0, False,
+    def test_recover_nan(self, spark, src):
+        self._compare(spark, src, (0.5, -0.25, 0.5, -0.25), (60, 48), 1,
+                      True, float("nan"))
+
+    def test_positional_index_map(self, spark, src):
+        self._compare(spark, src, (0.3, 0.0, 0.3, 0.0), (10, 8), 0, False,
                       -1.0, idx_map=(3, 3, 1, 1))
 
     def test_nan_not_null_through_arrow(self, spark):
@@ -356,3 +353,19 @@ def test_gather_fused_single_shuffle_plan(spark):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
+
+
+def test_pack_ij_bound_check():
+    """The (j, i) -> int64 routing pack is exact only below 2^31 in each
+    axis: grids at or past it are refused on the driver, before any
+    Column is built; below it the numpy decode inverts the pack."""
+    from xcube_resampling_spark.operators.utils import pack_ij, unpack_ij
+
+    for sizes in (((2**31, 4),), ((4, 4), (4, 2**31)), ((-1, 4),)):
+        with pytest.raises(ValueError, match="2\\^31"):
+            pack_ij(*sizes)
+    j = np.array([0, 5, 2**31 - 1], dtype=np.int64)
+    i = np.array([2**31 - 1, 7, 0], dtype=np.int64)
+    jj, ii = unpack_ij(j * 2**31 + i)
+    np.testing.assert_array_equal(jj, j)
+    np.testing.assert_array_equal(ii, i)

@@ -265,6 +265,26 @@ class TestMalformed:
         with pytest.raises(ValueError, match="stts"):
             parse_mp4_samples(bytes(data))
 
+    def test_stbl_rejects_stts_stsz_mismatch_before_expanding(self):
+        # the sample tables are checked against each other inside
+        # _parse_stbl, before the stts runs are expanded per sample: a
+        # corrupted run count must raise, not size an allocation
+        from xcube_resampling_spark.extensions.mp4demux import (
+            _find,
+            _parse_stbl,
+        )
+
+        data = bytearray(build_mp4(_samples(6)))
+        idx = data.find(b"stts")
+        # stts layout: fourcc, ver/flags(4), count(4), then
+        # (sample_count, delta) runs -- one run of 6 -> 7
+        struct.pack_into(">I", data, idx + 4 + 4 + 4, 7)
+        data = bytes(data)
+        stbl = data.find(b"stbl") - 4
+        with pytest.raises(ValueError, match="stts runs cover 7 samples, "
+                                             "stsz has 6"):
+            _parse_stbl(data, *_find(data, stbl, len(data), b"stbl"))
+
     def test_stz2_refused(self):
         data = bytearray(build_mp4(_samples(3)))
         idx = data.find(b"stsz")

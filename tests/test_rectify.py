@@ -16,6 +16,7 @@ from .sampledata import (
     create_2x2_dataset_with_irregular_coords_antimeridian,
     create_2x2x2_dataset_with_irregular_coords,
     create_4x4_dataset_with_irregular_coords,
+    long_pixels_df,
 )
 
 nan = np.nan
@@ -463,8 +464,9 @@ class TestRectifyDistributedCoords:
 class TestRectifyFused:
     """rectify_fused_tiled = scatter_from_coords_tiled + gather_var fused
     into two applyInPandas shuffles; must be value-identical to the
-    un-fused pipeline, including NaN coords, SQL-NULL (absent) source
-    pixels, genuine-NaN values, non-NaN fill, and num_t > 1."""
+    un-fused pipeline at every num_t (one and several presence words),
+    including NaN coords, SQL-NULL and absent source pixels, genuine-NaN
+    values and non-NaN fill."""
 
     @staticmethod
     def _swath(spark):
@@ -477,8 +479,6 @@ class TestRectifyFused:
         y = 50.0 - 0.05 * jj + 0.011 * ii + rng.normal(0, 0.004, ii.shape)
         x[5, 7] = np.nan
         y[20, 3] = np.nan
-        val = rng.normal(0, 1, ii.shape)
-        val[11, 11] = np.nan  # becomes SQL NULL via pandas conversion
         coords_pdf = pd.DataFrame(
             {
                 "j": jj.ravel().astype("int32"),
@@ -487,23 +487,22 @@ class TestRectifyFused:
                 "y": y.ravel(),
             }
         )
-        vals_pdf = pd.DataFrame(
-            {
-                "t": np.zeros(ii.size, "int32"),
-                "j": jj.ravel().astype("int32"),
-                "i": ii.ravel().astype("int32"),
-                "value": val.ravel(),
-            }
-        )
-        # drop one source pixel entirely (absent row -> fill)
-        vals_pdf = vals_pdf[~((vals_pdf.j == 30) & (vals_pdf.i == 30))]
         return (
             spark.createDataFrame(coords_pdf),
-            spark.createDataFrame(vals_pdf),
+            rng.normal(0, 1, ii.shape),
             (w_s, h_s),
         )
 
-    def _compare(self, spark, interp, fill, num_t=1, values=None):
+    @pytest.fixture(scope="class", params=[1, 3, 63, 130])
+    def data(self, spark, request):
+        coords, base, src_size = self._swath(spark)
+        values = long_pixels_df(
+            spark, base, request.param, nan_px=(11, 11), null_px=(25, 17),
+            absent_px={(30, 30), (31, 30), (40, 5)},
+        )
+        return coords, values, src_size, request.param
+
+    def _compare(self, spark, data, interp, fill):
         from pyspark.sql import functions as F
 
         from xcube_resampling_spark.crs import CRS_WGS84
@@ -514,9 +513,7 @@ class TestRectifyFused:
             scatter_from_coords_tiled,
         )
 
-        coords, values_df, src_size = self._swath(spark)
-        if values is not None:
-            values_df = values
+        coords, values_df, src_size, num_t = data
         tgm = GridMapping.regular((60, 70), (10.0, 47.0), 0.045, CRS_WGS84)
         winners = scatter_from_coords_tiled(coords, tgm, block_rows=16)
         ref = gather_var(
@@ -540,33 +537,22 @@ class TestRectifyFused:
             f"{interp}: {int((~same).sum())} mismatches of {len(a)}"
         )
 
-    def test_nearest_nan_fill(self, spark):
-        self._compare(spark, "nearest", float("nan"))
+    def test_nearest_nan_fill(self, spark, data):
+        self._compare(spark, data, "nearest", float("nan"))
 
-    def test_bilinear_nan_fill(self, spark):
-        self._compare(spark, "bilinear", float("nan"))
+    def test_bilinear_nan_fill(self, spark, data):
+        self._compare(spark, data, "bilinear", float("nan"))
 
-    def test_triangular_nan_fill(self, spark):
-        self._compare(spark, "triangular", float("nan"))
+    def test_triangular_nan_fill(self, spark, data):
+        self._compare(spark, data, "triangular", float("nan"))
 
-    def test_nearest_numeric_fill(self, spark):
-        """Absent source pixel -> fill (not NaN), NaN value -> fill only
-        because pandas NaN arrives as SQL NULL."""
-        self._compare(spark, "nearest", -999.0)
+    def test_nearest_numeric_fill(self, spark, data):
+        """Absent or NULL source pixel -> fill (not NaN); a genuine NaN
+        value stays NaN."""
+        self._compare(spark, data, "nearest", -999.0)
 
-    def test_bilinear_numeric_fill(self, spark):
-        self._compare(spark, "bilinear", -999.0)
-
-    def test_3d_bilinear(self, spark):
-        import pandas as pd
-
-        coords, values_df, _ = self._swath(spark)
-        v0 = values_df.toPandas()
-        v3 = pd.concat([v0, v0.assign(t=1, value=v0.value * 2.0)])
-        self._compare(
-            spark, "bilinear", float("nan"), num_t=2,
-            values=spark.createDataFrame(v3),
-        )
+    def test_bilinear_numeric_fill(self, spark, data):
+        self._compare(spark, data, "bilinear", -999.0)
 
 
 def test_rectify_fused_two_shuffle_plan(spark):
@@ -583,7 +569,6 @@ def test_rectify_fused_two_shuffle_plan(spark):
         (F.col("id") % 10 * 1.0).alias("x"),
         (F.col("id") / 10 * 1.0).alias("y"),
         F.rand(1).alias("val_0"),
-        F.lit(True).alias("pres_0"),
     )
     tgm = GridMapping.regular((10, 10), (0.0, 0.0), 1.0, CRS_WGS84)
     out = rectify_fused_tiled(

@@ -14,6 +14,7 @@ from .sampledata import (
     create_2x5x5_dataset_regular_utm,
     create_5x5_dataset_regular_utm,
     create_large_dataset_for_reproject,
+    long_pixels_df,
 )
 
 
@@ -294,30 +295,22 @@ class TestReproject:
 
 class TestGatherInterpFused:
     """gather_interp_fused (cogrouped block kernel) must be value-identical
-    to the join+pivot _gather_interp, including NaN data, absent pixels,
-    out-of-source stencils, exact-integer indices (ceil == floor), numeric
-    fills, the nearest-skips-int-cast rule, and must emit real NaNs."""
+    to the join+pivot _gather_interp at every num_t, including genuine-NaN
+    data, SQL-NULL and absent pixels, out-of-source stencils,
+    exact-integer indices (ceil == floor), numeric fills, the
+    nearest-skips-int-cast rule, and must emit real NaNs."""
 
-    @staticmethod
-    def _data(spark):
+    @pytest.fixture(scope="class", params=[1, 3, 63])
+    def data(self, spark, request):
         import pandas as pd
 
         rng = np.random.default_rng(13)
         src_w, src_h = 33, 41
-        jj, ii = np.meshgrid(
-            np.arange(src_h), np.arange(src_w), indexing="ij"
+        src = long_pixels_df(
+            spark, rng.normal(size=(src_h, src_w)), request.param,
+            nan_px=(5, 6), null_px=(9, 14),
+            absent_px={(20, 20), (21, 20), (30, 2)},
         )
-        val = rng.normal(size=jj.shape)
-        val[5, 6] = np.nan
-        pdf = pd.DataFrame(
-            {
-                "t": np.zeros(jj.size, "int32"),
-                "j": jj.ravel().astype("int32"),
-                "i": ii.ravel().astype("int32"),
-                "value": val.ravel(),
-            }
-        )
-        pdf = pdf[~((pdf.j == 20) & (pdf.i == 20))]
         tw, th = 29, 37
         tjj, tii = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
         ix = 1.17 * tii + 0.1 * np.sin(tjj * 0.3) - 2.0
@@ -333,9 +326,10 @@ class TestGatherInterpFused:
             }
         )
         return (
-            spark.createDataFrame(pdf),
+            src,
             spark.createDataFrame(gpdf),
             (src_w, src_h),
+            request.param,
         )
 
     @pytest.mark.parametrize(
@@ -348,7 +342,7 @@ class TestGatherInterpFused:
             ("triangular", float("nan"), False),
         ],
     )
-    def test_matches_join_gather(self, spark, interp, fill, is_int):
+    def test_matches_join_gather(self, spark, data, interp, fill, is_int):
         from pyspark.sql import functions as F
 
         from xcube_resampling_spark.operators.reproject import (
@@ -356,23 +350,23 @@ class TestGatherInterpFused:
             gather_interp_fused,
         )
 
-        src, grid2d, src_size = self._data(spark)
+        src, grid2d, src_size, num_t = data
         ref = _gather_interp(
-            grid2d, src, spark, src_size, 1, interp, fill, is_int
+            grid2d, src, spark, src_size, num_t, interp, fill, is_int
         ).toPandas().sort_values(["t", "j", "i"]).reset_index(drop=True)
         got_df = gather_interp_fused(
-            grid2d, src, spark, src_size, 1, interp, fill, is_int,
+            grid2d, src, spark, src_size, num_t, interp, fill, is_int,
             block_rows=8,
         )
         assert got_df.filter(F.col("value").isNull()).count() == 0
         got = got_df.toPandas().sort_values(
             ["t", "j", "i"]
         ).reset_index(drop=True)
+        assert len(ref) == len(got)
         a = ref["value"].to_numpy()
         b = got["value"].to_numpy()
         same = (np.isnan(a) & np.isnan(b)) | (a == b)
         assert same.all(), int((~same).sum())
-
 
     def test_matches_join_gather_across_chunk_boundary(self, spark):
         """Round-14 kernel rewrite: the fused kernel interpolates target

@@ -49,7 +49,6 @@ def rectify_df(spark, w, h, tw, th, y0, block_rows=32, dst_block_rows=32):
         (F.lit(0.0) + 0.01 * F.col("i") + 0.003 * F.col("j")).alias("x"),
         (F.lit(60.0) - 0.01 * F.col("j") + 0.002 * F.col("i")).alias("y"),
         F.col("value").alias("val_0"),
-        F.lit(True).alias("pres_0"),
     )
     target_gm = GridMapping.regular((tw, th), (0.0, float(y0)), 0.0125,
                                     CRS_WGS84)

@@ -117,64 +117,103 @@ def _full_box(data: bytes, body: int):
     return ver, flags, body + 4
 
 
+def _entries(data: bytes, q: int, end: int, width: int,
+             name: str) -> tuple[int, int]:
+    """(count, first_entry) of a sample table whose 32-bit entry count
+    sits at ``q``.  Raises ``ValueError`` before anything is allocated
+    when ``count`` entries of ``width`` bytes overrun the box ending at
+    ``end`` -- one corrupted count must not size an allocation."""
+    if q + 4 > end:
+        raise ValueError(f"{name}: truncated entry count")
+    (n,) = struct.unpack_from(">I", data, q)
+    if n * width > end - q - 4:
+        raise ValueError(
+            f"{name}: {n} entries of {width} bytes overrun the "
+            f"{end - q - 4} bytes left in the box")
+    return n, q + 4
+
+
 def _parse_stbl(data: bytes, start: int, end: int) -> dict:
-    """Decode one track's sample tables into dense per-sample arrays."""
+    """Decode one track's sample tables into dense per-sample arrays.
+
+    Every length field is validated before it sizes an allocation:
+    table entry counts against the bytes left in their box, the
+    ``stts``/``ctts`` run counts against the ``stsz`` sample count, and
+    a fixed-size ``stsz`` against the file size."""
     t: dict = {}
+    runs: dict = {}
     for b, p, e, _ in _boxes(data, start, end):
         if b == b"stts":
             _, _, q = _full_box(data, p)
-            (n,) = struct.unpack_from(">I", data, q)
-            runs = struct.unpack_from(f">{2 * n}I", data, q + 4)
-            counts = np.asarray(runs[0::2], dtype=np.int64)
-            deltas = np.asarray(runs[1::2], dtype=np.int64)
-            t["deltas"] = np.repeat(deltas, counts)
+            n, q = _entries(data, q, e, 8, "stts")
+            ent = struct.unpack_from(f">{2 * n}I", data, q)
+            runs["stts"] = (np.asarray(ent[0::2], dtype=np.int64),
+                            np.asarray(ent[1::2], dtype=np.int64))
         elif b == b"ctts":
             ver, _, q = _full_box(data, p)
-            (n,) = struct.unpack_from(">I", data, q)
+            n, q = _entries(data, q, e, 8, "ctts")
             counts = np.empty(n, dtype=np.int64)
             offs = np.empty(n, dtype=np.int64)
             for k in range(n):
-                c, = struct.unpack_from(">I", data, q + 4 + 8 * k)
+                c, = struct.unpack_from(">I", data, q + 8 * k)
                 # v1 offsets are SIGNED (negative composition shift)
                 fmt = ">i" if ver == 1 else ">I"
-                o, = struct.unpack_from(fmt, data, q + 8 + 8 * k)
+                o, = struct.unpack_from(fmt, data, q + 4 + 8 * k)
                 counts[k], offs[k] = c, o
-            t["ctts"] = np.repeat(offs, counts)
+            runs["ctts"] = (counts, offs)
         elif b == b"stsc":
             _, _, q = _full_box(data, p)
-            (n,) = struct.unpack_from(">I", data, q)
-            ent = struct.unpack_from(f">{3 * n}I", data, q + 4)
+            n, q = _entries(data, q, e, 12, "stsc")
+            ent = struct.unpack_from(f">{3 * n}I", data, q)
             # (first_chunk, samples_per_chunk, sample_desc_idx) runs
             t["stsc"] = [
                 (ent[3 * k], ent[3 * k + 1]) for k in range(n)
             ]
         elif b == b"stsz":
             _, _, q = _full_box(data, p)
-            fixed, n = struct.unpack_from(">II", data, q)
+            if q + 4 > e:
+                raise ValueError("stsz: truncated sample size")
+            (fixed,) = struct.unpack_from(">I", data, q)
+            n, q = _entries(data, q + 4, e, 0 if fixed else 4, "stsz")
             if fixed:
+                if n * fixed > len(data):
+                    raise ValueError(
+                        f"stsz: {n} samples of {fixed} bytes exceed the "
+                        f"{len(data)}-byte file")
                 t["sizes"] = np.full(n, fixed, dtype=np.int64)
             else:
                 t["sizes"] = np.asarray(
-                    struct.unpack_from(f">{n}I", data, q + 8),
+                    struct.unpack_from(f">{n}I", data, q),
                     dtype=np.int64)
         elif b == b"stz2":
             raise NotImplementedError(
                 "stz2 compact sample sizes are not supported")
         elif b in (b"stco", b"co64"):
             _, _, q = _full_box(data, p)
-            (n,) = struct.unpack_from(">I", data, q)
+            width = 8 if b == b"co64" else 4
+            n, q = _entries(data, q, e, width, b.decode())
             fmt = f">{n}Q" if b == b"co64" else f">{n}I"
             t["chunk_offsets"] = np.asarray(
-                struct.unpack_from(fmt, data, q + 4), dtype=np.int64)
+                struct.unpack_from(fmt, data, q), dtype=np.int64)
         elif b == b"stss":
             _, _, q = _full_box(data, p)
-            (n,) = struct.unpack_from(">I", data, q)
+            n, q = _entries(data, q, e, 4, "stss")
             t["sync"] = np.asarray(
-                struct.unpack_from(f">{n}I", data, q + 4),
-                dtype=np.int64)
+                struct.unpack_from(f">{n}I", data, q), dtype=np.int64)
         elif b == b"stsd" and p + 16 <= e:
             t["codec"] = data[p + 12:p + 16].decode(
                 "ascii", errors="replace").strip()
+    if "sizes" in t:
+        n = len(t["sizes"])
+        for name, key in (("stts", "deltas"), ("ctts", "ctts")):
+            if name not in runs:
+                continue
+            counts, vals = runs[name]
+            if int(counts.sum()) != n:
+                raise ValueError(
+                    f"{name} runs cover {int(counts.sum())} samples, "
+                    f"stsz has {n}")
+            t[key] = np.repeat(vals, counts)
     return t
 
 
@@ -414,17 +453,11 @@ def parse_mp4_samples(data: bytes, *, want_payload: bool = True):
         sizes = stbl["sizes"]
         n = len(sizes)
         deltas = stbl.get("deltas")
-        if deltas is None or len(deltas) != n:
+        if deltas is None:
             raise ValueError(
-                f"track {track_id}: stts covers "
-                f"{0 if deltas is None else len(deltas)} samples, "
-                f"stsz has {n}")
+                f"track {track_id}: no stts, stsz has {n} samples")
         dts = np.concatenate(([0], np.cumsum(deltas[:-1])))
         ctts = stbl.get("ctts")
-        if ctts is not None and len(ctts) != n:
-            raise ValueError(
-                f"track {track_id}: ctts covers {len(ctts)} samples, "
-                f"stsz has {n}")
         pts = dts + (ctts if ctts is not None else 0)
         if "stsc" not in stbl or "chunk_offsets" not in stbl:
             raise ValueError(

@@ -42,6 +42,9 @@ from .utils import (
     get_fill_value,
     get_interp_method_int,
     get_recover_nan,
+    pack_ij,
+    pivot_t,
+    source_plane,
 )
 
 _HIGHER_ORDER_ERROR = (
@@ -485,50 +488,6 @@ def gather_fused(
     B = int(block_rows)
     n_blk = (h + B - 1) // B
 
-    # pivot values to wide per-t columns (rectify's fuse pattern: Arrow
-    # list columns cost per-row Python objects, wide columns are numpy
-    # views).  num_t == 1 is a pure projection -- no shuffle.
-    if num_t == 1:
-        vals = src_df.select(
-            "j", "i", F.col("value").alias("val_0"),
-        )
-    else:
-        vals = src_df.groupBy("j", "i").agg(
-            *[
-                F.max(F.when(F.col("t") == k, F.col("value")))
-                .alias(f"val_{k}")
-                for k in range(num_t)
-            ]
-        )
-    # Routing shuffle byte-packing (guide section 2.3, the rectify /
-    # reproject pattern): per-t presence booleans travel as ONE
-    # bit-packed int64 (bool-column fallback above 62 t-slices), and
-    # (j, i) travel as ONE packed int64 below -- each UnsafeRow
-    # fixed-width field is an 8-byte slot either way.
-    packed_pres = num_t <= 62
-    if packed_pres:
-        pres_cols = [
-            sum(
-                (
-                    F.when(F.col(f"val_{k}").isNotNull(),
-                           F.lit(1 << k).cast("bigint"))
-                    .otherwise(F.lit(0).cast("bigint"))
-                    for k in range(num_t)
-                ),
-                start=F.lit(0).cast("bigint"),
-            ).alias("pres")
-        ]
-    else:
-        pres_cols = [
-            F.col(f"val_{k}").isNotNull().alias(f"pres_{k}")
-            for k in range(num_t)
-        ]
-    vals = vals.select(
-        "j", "i",
-        *[F.col(f"val_{k}") for k in range(num_t)],
-        *pres_cols,
-    )
-
     # target-block routing: source row sj can be referenced by grid rows
     # whose src_jf lands within +-1.5 of it (nearest +-0.5, bilinear +-1,
     # plus slack); invert src_jf = j_scale * (j*k_j + p_j) + j_off
@@ -542,21 +501,24 @@ def gather_fused(
     g_hi = F.least(
         F.ceil((jj_hi - p_j) / k_j).cast("int"), F.lit(h - 1)
     )
-    routed = vals.filter(g_hi >= g_lo).select(
-        (F.col("j").cast("bigint") * F.lit(1 << 31).cast("bigint")
-         + F.col("i")).alias("sp"),
-        *[F.col(f"val_{k}") for k in range(num_t)],
-        *([F.col("pres")] if packed_pres
-          else [F.col(f"pres_{k}") for k in range(num_t)]),
+    # NULL -> fill happens here in the JVM: absent pixels read fill from
+    # the kernel's fill-initialised source plane, so the routed rows need
+    # no presence column; genuine NaNs pass (coalesce replaces only NULL)
+    routed = pivot_t(src_df, num_t).filter(g_hi >= g_lo).select(
+        pack_ij(source_size).alias("sp"),
+        *[
+            F.coalesce(F.col(f"val_{k}"), F.lit(fill)).alias(f"val_{k}")
+            for k in range(num_t)
+        ],
         F.explode(
             F.sequence(
                 (g_lo / B).cast("int"), (g_hi / B).cast("int")
             )
         ).alias("blk"),
     )
-    # sp = -1 marks the sentinel; non-NULL long literals keep the pandas
-    # sp / pres columns int64 (a NULL would widen them to float64, which
-    # cannot represent a packed 62-bit key exactly)
+    # sp = -1 marks the sentinel; a non-NULL long literal keeps the pandas
+    # sp column int64 (a NULL would widen it to float64, which cannot
+    # represent a packed 62-bit key exactly)
     sentinels = spark.range(n_blk).select(
         F.col("id").cast("int").alias("blk"),
         F.lit(-1).cast("bigint").alias("sp"),
@@ -564,13 +526,6 @@ def gather_fused(
             F.lit(None).cast("double").alias(f"val_{k}")
             for k in range(num_t)
         ],
-        *(
-            [F.lit(0).cast("bigint").alias("pres")] if packed_pres
-            else [
-                F.lit(None).cast("boolean").alias(f"pres_{k}")
-                for k in range(num_t)
-            ]
-        ),
     )
 
     out_schema = T.StructType(
@@ -590,28 +545,9 @@ def gather_fused(
         bb = int(key[0])
         j_start = bb * B
         rows_h = min(B, h - j_start)
-        real = pdf[pdf["sp"].to_numpy() >= 0]
-        if len(real):
-            sp = real["sp"].to_numpy(np.int64)
-            sj_arr = sp >> 31
-            si_arr = sp & 0x7FFFFFFF
-            sj_lo = int(sj_arr.min())
-            sj_n = int(sj_arr.max()) - sj_lo + 1
-            V = np.full((num_t, sj_n, src_w), fill)
-            if packed_pres:
-                pres_bits = real["pres"].to_numpy(np.int64)
-            for k in range(num_t):
-                v = real[f"val_{k}"].to_numpy(np.float64)
-                if packed_pres:
-                    p = ((pres_bits >> k) & 1).astype(bool)
-                else:
-                    p_raw = real[f"pres_{k}"].to_numpy()
-                    p = np.where(
-                        pd.isna(p_raw), False, p_raw).astype(bool)
-                V[k, sj_arr - sj_lo, si_arr] = np.where(p, v, fill)
-        else:
-            sj_lo, sj_n = 0, 1
-            V = np.full((num_t, 1, src_w), fill)
+        V, sj_lo, sj_n = source_plane(
+            pdf[pdf["sp"].to_numpy() >= 0], num_t, src_w, fill
+        )
 
         jj = (np.arange(j_start, j_start + rows_h) * k_j + p_j)
         ii = (np.arange(w) * k_i + p_i)

@@ -45,7 +45,10 @@ from .utils import (
     get_fill_value,
     get_interp_method_str,
     is_equal_crs,
+    pack_ij,
+    pivot_t,
     prep_interp_methods_downscale,
+    unpack_ij,
 )
 
 _NOT_IMPLEMENTED_ERROR = (
@@ -879,9 +882,13 @@ def gather_var(
 
 
 def _fused_match_schema(num_t: int) -> T.StructType:
-    """Per-t values travel as WIDE double columns (val_0..val_{n-1}), not an
-    array column: Arrow list columns cost a Python object per row on the
-    pandas side, wide columns are zero-copy numpy views.
+    """Candidate rows from the scatter kernel to the densify kernel.
+
+    val_0..val_{n-1} are the candidate's FINAL per-t values, with fill
+    already applied where a stencil corner was absent, so no presence
+    travels on this exchange (only the routing rows into the scatter
+    kernel carry presence words).  Wide double columns, as in
+    :func:`~.utils.pivot_t`.
 
     Shuffle fewer bytes (guide section 2.3): the candidate shuffle is the
     bigger of the fused path's two exchanges (one row per surviving
@@ -927,35 +934,25 @@ def fuse_coords_values(
     A NULL val_k (value NULL, or the (t, j, i) row absent, or the whole
     pixel absent) means "-> fill" downstream, mirroring the inner-join +
     ``coalesce`` semantics of :func:`gather_var`; a NaN double is a genuine
-    value and propagates through interpolation.  The kernel reads NULL-ness
-    from JVM-computed ``pres_k`` booleans because the Arrow->pandas hop
-    collapses NULL and NaN.
+    value and propagates through interpolation.  :func:`rectify_fused_tiled`
+    packs NULL-ness into presence words before the Arrow->pandas hop,
+    which collapses NULL and NaN.
     """
-    if num_t == 1:
-        v = values.select(
-            F.col("j").alias("vj"), F.col("i").alias("vi"),
-            F.col("value").alias("val_0"),
-        )
-    else:
-        v = values.groupBy(
-            F.col("j").alias("vj"), F.col("i").alias("vi")
-        ).agg(
-            *[
-                F.max(F.when(F.col("t") == k, F.col("value")))
-                .alias(f"val_{k}")
-                for k in range(num_t)
-            ]
-        )
+    v = pivot_t(values, num_t).select(
+        F.col("j").alias("vj"), F.col("i").alias("vi"),
+        *[F.col(f"val_{k}") for k in range(num_t)],
+    )
     return coords.join(
         v, (coords["j"] == v["vj"]) & (coords["i"] == v["vi"]), "left"
     ).select(
         coords["j"], coords["i"], "x", "y",
         *[F.col(f"val_{k}") for k in range(num_t)],
-        *[
-            F.col(f"val_{k}").isNotNull().alias(f"pres_{k}")
-            for k in range(num_t)
-        ],
     )
+
+
+# per-t presence bits per int64 word of rectify's routing rows (the
+# words stay non-negative)
+_PRES_BITS = 62
 
 
 def rectify_fused_tiled(
@@ -1017,35 +1014,32 @@ def rectify_fused_tiled(
 
     match_schema = _fused_match_schema(num_t)
 
-    # Routing shuffle byte-packing (guide section 2.3, same shape as
-    # reproject's gather cogroup): (j, i) travel as ONE packed int64
-    # (both non-negative 32-bit, integer-exact, kernel decode is two
-    # shifts) and the per-t presence booleans as ONE bit-packed int64
-    # (bool-column fallback above 62 t-slices) -- each UnsafeRow
-    # fixed-width field is an 8-byte slot, so this is 1 + (num_t - 1)
-    # fewer words per routed source row.
-    packed_pres = num_t <= 62
+    # Routing shuffle byte-packing (guide section 2.3): (j, i) travel as
+    # ONE packed int64, and the per-t presence (val_k NOT NULL) as
+    # ceil(num_t / 62) bit-packed int64 words -- each UnsafeRow
+    # fixed-width field is an 8-byte slot.  Presence must travel apart
+    # from the values: the Arrow->pandas hop turns NULL into NaN, and a
+    # stencil with any absent corner yields fill while a genuine NaN
+    # propagates.
+    n_words = -(-num_t // _PRES_BITS)
     b = F.floor(F.col("j") / B).cast("int")
-    if packed_pres:
-        pres_cols = [
-            sum(
-                (
-                    F.when(F.col(f"pres_{k}"),
-                           F.lit(1 << k).cast("bigint"))
-                    .otherwise(F.lit(0).cast("bigint"))
-                    for k in range(num_t)
-                ),
-                start=F.lit(0).cast("bigint"),
-            ).alias("pres")
-        ]
-    else:
-        pres_cols = [F.col(f"pres_{k}") for k in range(num_t)]
     blocks = fused.select(
-        (F.col("j").cast("bigint") * F.lit(1 << 31).cast("bigint")
-         + F.col("i")).alias("sp"),
+        pack_ij(source_size).alias("sp"),
         "x", "y",
         *[F.col(f"val_{k}") for k in range(num_t)],
-        *pres_cols,
+        *[
+            sum(
+                (
+                    F.when(F.col(f"val_{k}").isNotNull(),
+                           F.lit(1 << (k % _PRES_BITS)).cast("bigint"))
+                    .otherwise(F.lit(0).cast("bigint"))
+                    for k in range(wd * _PRES_BITS,
+                                   min(num_t, (wd + 1) * _PRES_BITS))
+                ),
+                start=F.lit(0).cast("bigint"),
+            ).alias(f"pres_w{wd}")
+            for wd in range(n_words)
+        ],
         F.explode(
             F.when(
                 (F.col("j") % B < 2) & (F.col("j") >= B),
@@ -1063,9 +1057,7 @@ def rectify_fused_tiled(
         if len(pdf) == 0:
             return empty
         blk = int(key[0])
-        sp = pdf["sp"].to_numpy(np.int64)
-        j_arr = sp >> 31
-        i_arr = sp & 0x7FFFFFFF
+        j_arr, i_arr = unpack_ij(pdf["sp"].to_numpy(np.int64))
         j_lo, i_lo = j_arr.min(), i_arr.min()
         hh = int(j_arr.max() - j_lo + 1)
         ww = int(i_arr.max() - i_lo + 1)
@@ -1079,18 +1071,16 @@ def rectify_fused_tiled(
         P = np.zeros((num_t, hh, ww), dtype=bool)
         X[j_arr - j_lo, i_arr - i_lo] = pdf["x"].to_numpy(np.float64)
         Y[j_arr - j_lo, i_arr - i_lo] = pdf["y"].to_numpy(np.float64)
-        if packed_pres:
-            pres_bits = pdf["pres"].to_numpy(np.int64)
+        words = [
+            pdf[f"pres_w{wd}"].to_numpy(np.int64) for wd in range(n_words)
+        ]
         for k in range(num_t):
             V[k, j_arr - j_lo, i_arr - i_lo] = (
                 pdf[f"val_{k}"].to_numpy(np.float64)
             )
-            if packed_pres:
-                p = ((pres_bits >> k) & 1).astype(bool)
-            else:
-                p_raw = pdf[f"pres_{k}"].to_numpy()
-                p = np.where(pd.isna(p_raw), False, p_raw).astype(bool)
-            P[k, j_arr - j_lo, i_arr - i_lo] = p
+            P[k, j_arr - j_lo, i_arr - i_lo] = (
+                words[k // _PRES_BITS] >> (k % _PRES_BITS)
+            ) & 1
 
         p0x, p0y = X[:-1, :-1], Y[:-1, :-1]
         p1x, p1y = X[:-1, 1:], Y[:-1, 1:]

@@ -38,7 +38,11 @@ from .utils import (
     num_t as num_t_of,
     get_fill_value,
     get_interp_method_str,
+    pack_ij,
+    pivot_t,
     prep_interp_methods_downscale,
+    source_plane,
+    unpack_ij,
 )
 
 _NOT_IMPLEMENTED_ERROR = (
@@ -543,48 +547,19 @@ def gather_interp_fused(
         )
     B = int(block_rows)
 
-    if num_t == 1:
-        vals = src_df.select("j", "i", F.col("value").alias("val_0"))
-    else:
-        vals = src_df.groupBy("j", "i").agg(
-            *[
-                F.max(F.when(F.col("t") == k, F.col("value")))
-                .alias(f"val_{k}")
-                for k in range(num_t)
-            ]
-        )
     # Shuffle fewer bytes (the cogroup stage is shuffle-bound at 100x:
     # 3.7 GB read + sort + Arrow ser/deser dominate its 160-225 s JVM
-    # CPU): (j, i) travel as ONE packed int64 (j * 2^31 + i -- both are
-    # non-negative 32-bit ints, so the packing is integer-exact and the
-    # kernel decode is two shifts), and the per-t presence booleans
-    # travel as ONE bit-packed int64 instead of num_t boolean columns
-    # (bool-column fallback above 62 t-slices).  One fewer field on the
-    # target rows, 1 + num_t fewer on the source rows.
-    packed_pres = num_t <= 62
+    # CPU): (j, i) travel as ONE packed int64 on both sides, and NULL ->
+    # fill happens here in the JVM, so the source rows carry no presence
+    # column -- absent pixels read fill from the kernel's fill-initialised
+    # source plane, and genuine NaNs pass (coalesce replaces only NULL).
     b = F.floor(F.col("j") / B).cast("int")
-    if packed_pres:
-        pres_cols = [
-            sum(
-                (
-                    F.when(F.col(f"val_{k}").isNotNull(),
-                           F.lit(1 << k).cast("bigint"))
-                    .otherwise(F.lit(0).cast("bigint"))
-                    for k in range(num_t)
-                ),
-                start=F.lit(0).cast("bigint"),
-            ).alias("pres")
-        ]
-    else:
-        pres_cols = [
-            F.col(f"val_{k}").isNotNull().alias(f"pres_{k}")
+    src_b = pivot_t(src_df, num_t).select(
+        pack_ij(source_size).alias("sp"),
+        *[
+            F.coalesce(F.col(f"val_{k}"), F.lit(fill)).alias(f"val_{k}")
             for k in range(num_t)
-        ]
-    src_b = vals.select(
-        (F.col("j").cast("bigint") * F.lit(1 << 31).cast("bigint")
-         + F.col("i")).alias("sp"),
-        *[F.col(f"val_{k}") for k in range(num_t)],
-        *pres_cols,
+        ],
         F.explode(
             F.when(
                 (F.col("j") % B == 0) & (F.col("j") >= B),
@@ -605,9 +580,9 @@ def gather_interp_fused(
     # partitioning changes.
     n_blk = max(1, -(-src_h // B))
     iy_in = (F.col("iy") > F.lit(-1.0)) & (F.col("iy") < F.lit(float(src_h)))
+    # target (j, i) are int32 grid indices: below 2^31 by type
     tgt_b = grid2d.select(
-        (F.col("j").cast("bigint") * F.lit(1 << 31).cast("bigint")
-         + F.col("i")).alias("tp"),
+        pack_ij().alias("tp"),
         "ix", "iy",
         F.when(
             iy_in,
@@ -636,27 +611,7 @@ def gather_interp_fused(
             return pd.DataFrame(
                 {f.name: [] for f in out_schema.fields}
             )
-        if len(src_pdf):
-            sp = src_pdf["sp"].to_numpy(np.int64)
-            sj_arr = sp >> 31
-            si_arr = sp & 0x7FFFFFFF
-            sj_lo = int(sj_arr.min())
-            sj_n = int(sj_arr.max()) - sj_lo + 1
-            V = np.full((num_t, sj_n, src_w), fill)
-            if packed_pres:
-                pres_bits = src_pdf["pres"].to_numpy(np.int64)
-            for k in range(num_t):
-                v = src_pdf[f"val_{k}"].to_numpy(np.float64)
-                if packed_pres:
-                    p = ((pres_bits >> k) & 1).astype(bool)
-                else:
-                    p_raw = src_pdf[f"pres_{k}"].to_numpy()
-                    p = np.where(
-                        pd.isna(p_raw), False, p_raw).astype(bool)
-                V[k, sj_arr - sj_lo, si_arr] = np.where(p, v, fill)
-        else:
-            sj_lo, sj_n = 0, 1
-            V = np.full((num_t, 1, src_w), fill)
+        V, sj_lo, sj_n = source_plane(src_pdf, num_t, src_w, fill)
 
         ix_all = tgt_pdf["ix"].to_numpy(np.float64)
         iy_all = tgt_pdf["iy"].to_numpy(np.float64)
@@ -718,14 +673,12 @@ def gather_interp_fused(
                     o = np.trunc(o)
             out[:, s:e] = o
 
-        tp = tgt_pdf["tp"].to_numpy(np.int64)
-        tj = (tp >> 31).astype(np.int32)
-        ti = (tp & 0x7FFFFFFF).astype(np.int32)
+        tj, ti = unpack_ij(tgt_pdf["tp"].to_numpy(np.int64))
         return pd.DataFrame(
             {
                 "t": np.repeat(np.arange(num_t, dtype=np.int32), n_tgt),
-                "j": np.tile(tj, num_t),
-                "i": np.tile(ti, num_t),
+                "j": np.tile(tj.astype(np.int32), num_t),
+                "i": np.tile(ti.astype(np.int32), num_t),
                 "value": out.reshape(num_t * n_tgt),
             }
         )

@@ -130,6 +130,74 @@ def num_t(dataset, var) -> int:
     return int(row.mt) + 1 if row.mt is not None else 1
 
 
+def pivot_t(values: DataFrame, num_t: int) -> DataFrame:
+    """Long (t, j, i, value) pixels -> one row per pixel
+    (j, i, val_0..val_{num_t-1}).
+
+    Wide double columns, not an array column: Arrow list columns cost a
+    Python object per row on the pandas side, wide columns are zero-copy
+    numpy views.  A (t, j, i) row that is absent or NULL gives a NULL
+    val_t.  num_t == 1 is a pure projection -- no shuffle."""
+    if num_t == 1:
+        return values.select("j", "i", F.col("value").alias("val_0"))
+    return values.groupBy("j", "i").agg(
+        *[
+            F.max(F.when(F.col("t") == k, F.col("value"))).alias(f"val_{k}")
+            for k in range(num_t)
+        ]
+    )
+
+
+_IJ_SHIFT = 31
+_IJ_LIMIT = 1 << 31
+
+
+def pack_ij(*sizes: tuple[int, int]):
+    """Pixel indices (j, i) as ONE int64 shuffle field j * 2^31 + i.
+
+    Each UnsafeRow fixed-width field is an 8-byte slot, so the pack
+    saves one word per routed row; the kernel decodes it with
+    :func:`unpack_ij` (a shift and a mask).  The pack is exact only for
+    0 <= i, j < 2^31: raises ``ValueError`` on the driver when any of
+    the (width, height) ``sizes`` of the grids being packed reaches
+    2^31."""
+    for w, h in sizes:
+        if not (0 <= w < _IJ_LIMIT and 0 <= h < _IJ_LIMIT):
+            raise ValueError(
+                f"grid size {(w, h)} cannot pack (j, i) into one int64: "
+                f"width and height must be below 2^{_IJ_SHIFT}"
+            )
+    return (
+        F.col("j").cast("bigint") * F.lit(_IJ_LIMIT).cast("bigint")
+        + F.col("i")
+    )
+
+
+def unpack_ij(packed):
+    """Inverse of :func:`pack_ij` on a numpy int64 array: (j, i)."""
+    return packed >> _IJ_SHIFT, packed & (_IJ_LIMIT - 1)
+
+
+def source_plane(pdf, num_t: int, src_w: int, fill: float):
+    """Dense (num_t, sj_n, src_w) block of the routed source rows
+    (``sp`` = packed (j, i), ``val_0..val_{num_t-1}``) spanning source
+    rows sj_lo .. sj_lo + sj_n - 1; pixels without a row read ``fill``.
+
+    Returns (V, sj_lo, sj_n); an empty ``pdf`` gives a one-row all-fill
+    plane."""
+    import numpy as np
+
+    if not len(pdf):
+        return np.full((num_t, 1, src_w), fill), 0, 1
+    sj, si = unpack_ij(pdf["sp"].to_numpy(np.int64))
+    sj_lo = int(sj.min())
+    sj_n = int(sj.max()) - sj_lo + 1
+    V = np.full((num_t, sj_n, src_w), fill)
+    for k in range(num_t):
+        V[k, sj - sj_lo, si] = pdf[f"val_{k}"].to_numpy(np.float64)
+    return V, sj_lo, sj_n
+
+
 def prep_interp_methods_downscale(interp_methods):
     """triangular -> bilinear when downscaling
     (reference utils.py:239-251)."""
