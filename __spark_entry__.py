@@ -361,31 +361,57 @@ CROSS JOIN (VALUES ('fs'), ('kv'), ('zip'), ('http'),
 RECT_W, RECT_H = 30, 44
 
 
+def _rectify_value(spark, values, source_gm, target_gm, interp,
+                   coords=None):
+    """rectify_dataset over a one-variable dataset whose long-format
+    ``values`` hold the swath (a 3-D variable when ``coords`` names its
+    leading ``time`` axis), rounded like the oracles."""
+    from xcube_resampling_spark.dataset import SparkDataset, Variable
+    from xcube_resampling_spark.operators.rectify import rectify_dataset
+
+    coords = coords or {}
+    dims = tuple(coords) + ("y", "x")
+    src = SparkDataset(
+        spark=spark,
+        data_vars={"value": Variable("value", values, dims, "float64", {})},
+        coords=coords,
+        yx_dims=("y", "x"),
+    )
+    out = rectify_dataset(
+        src, target_gm=target_gm, source_gm=source_gm,
+        interp_methods=interp, fill_values=FILL,
+    )
+    return out.data_vars["value"].df.select(
+        "t", "j", "i", F.round("value", 6).alias("value")
+    )
+
+
+def _swath_gm():
+    """The sheared swath's 2-D lon/lat grid mapping."""
+    import numpy as np
+
+    from xcube_resampling_spark.crs import CRS_WGS84
+    from xcube_resampling_spark.gridmapping import GridMapping
+
+    jj, ii = np.meshgrid(np.arange(RH), np.arange(RW), indexing="ij")
+    lon = ii + 0.35 * jj
+    lat = 50.0 - jj - 0.15 * ii
+    return GridMapping.from_coords_2d(lon, lat, CRS_WGS84)
+
+
+def _rect_target_gm():
+    """The regular target grid of the swath queries."""
+    from xcube_resampling_spark.crs import CRS_WGS84
+    from xcube_resampling_spark.gridmapping import GridMapping
+
+    return GridMapping.regular((RECT_W, RECT_H), (0.0, 6.0), 1.0, CRS_WGS84)
+
+
 def _q_rectify(interp):
     def q(spark, sf_dir):
-        import numpy as np
-
-        from xcube_resampling_spark.crs import CRS_WGS84
-        from xcube_resampling_spark.gridmapping import GridMapping
-        from xcube_resampling_spark.operators.rectify import (
-            gather_var,
-            scatter_source_ij,
-        )
-
-        jj, ii = np.meshgrid(np.arange(RH), np.arange(RW), indexing="ij")
-        lon = ii + 0.35 * jj
-        lat = 50.0 - jj - 0.15 * ii
-        source_gm = GridMapping.from_coords_2d(lon, lat, CRS_WGS84)
-        target_gm = GridMapping.regular(
-            (RECT_W, RECT_H), (0.0, 6.0), 1.0, CRS_WGS84
-        )
-        winners = scatter_source_ij(spark, source_gm, target_gm)
-        out = gather_var(
-            spark, winners, _raster(spark, sf_dir), (RW, RH),
-            (RECT_W, RECT_H), 1, interp, FILL, False,
-        )
-        return out.select(
-            "t", "j", "i", F.round("value", 6).alias("value")
+        return _rectify_value(
+            spark, _raster(spark, sf_dir), _swath_gm(), _rect_target_gm(),
+            interp,
         )
 
     return q
@@ -692,10 +718,7 @@ def q_rectify_distributed_coords(spark, sf_dir):
     pass + aggregation (gridmapping/distributed.py).  Same swath and target
     as rectify_swath_nearest, so it shares SQL_RECTIFY."""
     from xcube_resampling_spark.crs import CRS_WGS84
-    from xcube_resampling_spark.dataset import SparkDataset, Variable
-    from xcube_resampling_spark.gridmapping import GridMapping
     from xcube_resampling_spark.gridmapping.distributed import GridMappingDF
-    from xcube_resampling_spark.operators.rectify import rectify_dataset
 
     r = _raster(spark, sf_dir)
     coords = r.select(
@@ -706,22 +729,7 @@ def q_rectify_distributed_coords(spark, sf_dir):
     gmdf = GridMappingDF.from_coords_df(
         coords, CRS_WGS84, size=(RW, RH)
     )
-    src = SparkDataset(
-        spark=spark,
-        data_vars={"value": Variable("value", r, ("y", "x"), "float64", {})},
-        coords={},
-        yx_dims=("y", "x"),
-    )
-    target_gm = GridMapping.regular(
-        (RECT_W, RECT_H), (0.0, 6.0), 1.0, CRS_WGS84
-    )
-    out = rectify_dataset(
-        src, target_gm=target_gm, source_gm=gmdf,
-        interp_methods="nearest", fill_values=FILL,
-    )
-    return out.data_vars["value"].df.select(
-        "t", "j", "i", F.round("value", 6).alias("value")
-    )
+    return _rectify_value(spark, r, gmdf, _rect_target_gm(), "nearest")
 
 
 def _q_rectify_fused(interp):
@@ -773,10 +781,8 @@ ROTP_XMIN, ROTP_YMIN, ROTP_RES = 10.5, 45.0, 0.25
 
 def q_rectify_rotated_pole(spark, sf_dir):
     from xcube_resampling_spark.crs import CRS
-    from xcube_resampling_spark.dataset import SparkDataset, Variable
     from xcube_resampling_spark.gridmapping import GridMapping
     from xcube_resampling_spark.gridmapping.distributed import GridMappingDF
-    from xcube_resampling_spark.operators.rectify import rectify_dataset
 
     rp_crs = CRS.from_cf(dict(
         grid_mapping_name="rotated_latitude_longitude",
@@ -794,22 +800,10 @@ def q_rectify_rotated_pole(spark, sf_dir):
     gmdf = GridMappingDF.from_coords_df(
         coords, rp_crs, size=(RW, RH)
     )
-    src = SparkDataset(
-        spark=spark,
-        data_vars={"value": Variable("value", r, ("y", "x"), "float64", {})},
-        coords={},
-        yx_dims=("y", "x"),
-    )
     target_gm = GridMapping.regular(
         (ROTP_W, ROTP_H), (ROTP_XMIN, ROTP_YMIN), ROTP_RES, "EPSG:4326"
     )
-    out = rectify_dataset(
-        src, target_gm=target_gm, source_gm=gmdf,
-        interp_methods="nearest", fill_values=FILL,
-    )
-    return out.data_vars["value"].df.select(
-        "t", "j", "i", F.round("value", 6).alias("value")
-    )
+    return _rectify_value(spark, r, gmdf, target_gm, "nearest")
 
 
 def _rotpole_rectify_sql() -> str:
@@ -869,10 +863,8 @@ def q_rectify_geos(spark, sf_dir):
     ray/ellipsoid geos inverse through transform_coords_df (reference
     rectify.py:127-129; transform.py:40-77) before the scatter."""
     from xcube_resampling_spark.crs import CRS
-    from xcube_resampling_spark.dataset import SparkDataset, Variable
     from xcube_resampling_spark.gridmapping import GridMapping
     from xcube_resampling_spark.gridmapping.distributed import GridMappingDF
-    from xcube_resampling_spark.operators.rectify import rectify_dataset
 
     geo_crs = CRS.geostationary(lon_0=GEO_LON0, sweep="x", h=GEO_H_SAT)
     r = _raster(spark, sf_dir)
@@ -884,22 +876,10 @@ def q_rectify_geos(spark, sf_dir):
          + GRECT_SDY * F.col("i")).cast("double").alias("y"),
     )
     gmdf = GridMappingDF.from_coords_df(coords, geo_crs, size=(RW, RH))
-    src = SparkDataset(
-        spark=spark,
-        data_vars={"value": Variable("value", r, ("y", "x"), "float64", {})},
-        coords={},
-        yx_dims=("y", "x"),
-    )
     target_gm = GridMapping.regular(
         (GRECT_W, GRECT_H), (GRECT_X0, GRECT_YMIN), GRECT_RES, "EPSG:4326"
     )
-    out = rectify_dataset(
-        src, target_gm=target_gm, source_gm=gmdf,
-        interp_methods="nearest", fill_values=FILL,
-    )
-    return out.data_vars["value"].df.select(
-        "t", "j", "i", F.round("value", 6).alias("value")
-    )
+    return _rectify_value(spark, r, gmdf, target_gm, "nearest")
 
 
 def _geos_rectify_sql() -> str:
@@ -954,10 +934,7 @@ def q_rectify_antimeridian(spark, sf_dir):
     from xcube_resampling_spark.crs import CRS_WGS84
     from xcube_resampling_spark.functions import to_lon_360
     from xcube_resampling_spark.gridmapping import GridMapping
-    from xcube_resampling_spark.operators.rectify import (
-        gather_var,
-        scatter_from_coords,
-    )
+    from xcube_resampling_spark.gridmapping.distributed import GridMappingDF
 
     r = _raster(spark, sf_dir)
     raw = F.lit(179.0) + 0.2 * F.col("i") + 0.07 * F.col("j")
@@ -970,15 +947,12 @@ def q_rectify_antimeridian(spark, sf_dir):
     target_gm = GridMapping.regular(
         (RECT_W, RECT_H), (179.0, 6.0), (0.2, 1.0), CRS_WGS84
     )
-    winners = scatter_from_coords(coords, target_gm)
-    out = gather_var(
-        spark, winners, r, (RW, RH), (RECT_W, RECT_H), 1,
-        "nearest", FILL, False,
-    )
-    return out.select("t", "j", "i", F.round("value", 6).alias("value"))
+    gmdf = GridMappingDF.from_coords_df(coords, CRS_WGS84, size=(RW, RH))
+    return _rectify_value(spark, r, gmdf, target_gm, "nearest")
 
-# 4-neighbor gather shared by bilinear/triangular (mirrors gather_var:
-# i1/j1 clamped to the source edge)
+
+# 4-neighbor gather shared by bilinear/triangular (mirrors the rectify
+# kernel's stencil: i1/j1 clamped to the source edge)
 _RECTIFY_4N_SQL = f""",
 bil AS (
   SELECT dst_j, dst_i,
@@ -1250,31 +1224,16 @@ RASTER3_SQL = f"""
 
 
 def q_rectify_swath_3d_nearest(spark, sf_dir):
-    """3-D rectification: the scatter index is computed once from the 2-D
-    coords; the gather fans out over the t axis (reference
-    rectify.py:285-296 loops t-chunks; here t is a join column)."""
+    """3-D rectification: the scatter runs once over the 2-D coords and
+    its kernel gathers every t-plane of the stencil (reference
+    rectify.py:285-296 loops t-chunks; here the planes travel as wide
+    per-t columns)."""
     import numpy as np
 
-    from xcube_resampling_spark.crs import CRS_WGS84
-    from xcube_resampling_spark.gridmapping import GridMapping
-    from xcube_resampling_spark.operators.rectify import (
-        gather_var,
-        scatter_source_ij,
+    return _rectify_value(
+        spark, _raster3(spark, sf_dir), _swath_gm(), _rect_target_gm(),
+        "nearest", coords={"time": np.arange(2)},
     )
-
-    jj, ii = np.meshgrid(np.arange(RH), np.arange(RW), indexing="ij")
-    lon = ii + 0.35 * jj
-    lat = 50.0 - jj - 0.15 * ii
-    source_gm = GridMapping.from_coords_2d(lon, lat, CRS_WGS84)
-    target_gm = GridMapping.regular(
-        (RECT_W, RECT_H), (0.0, 6.0), 1.0, CRS_WGS84
-    )
-    winners = scatter_source_ij(spark, source_gm, target_gm)
-    out = gather_var(
-        spark, winners, _raster3(spark, sf_dir), (RW, RH),
-        (RECT_W, RECT_H), 2, "nearest", FILL, False,
-    )
-    return out.select("t", "j", "i", F.round("value", 6).alias("value"))
 
 
 SQL_RECTIFY_3D = _RECTIFY_WINNERS_SQL.replace(

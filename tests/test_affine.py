@@ -234,7 +234,7 @@ class TestAffineGoldens:
 
 
 class TestGatherFused:
-    """gather_fused is the single-shuffle block-local twin of _gather;
+    """gather_fused must match the equi-join reference _gather;
     must be value-identical at every num_t, including genuine-NaN data,
     SQL-NULL and absent pixels, numeric fills, negative scales,
     positional index maps, and must emit real NaNs (not SQL NULLs) like
@@ -256,10 +256,9 @@ class TestGatherFused:
         from pyspark.sql import functions as F
 
         from xcube_resampling_spark.dataset import grid_df
-        from xcube_resampling_spark.operators.affine import (
-            _gather,
-            gather_fused,
-        )
+        from xcube_resampling_spark.operators.affine import gather_fused
+
+        from .reference_kernels import _gather
 
         src_df, src_size, num_t = src
         w, h = gsize

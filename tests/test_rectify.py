@@ -322,8 +322,10 @@ class TestRectify:
 
 
 class TestTiledScatter:
-    """scatter_from_coords_tiled is the numpy fast path of the SQL scatter;
-    same semantics (block-size invariant, <= 2 ulp numeric difference)."""
+    """The two scatter references of tests/reference_kernels.py agree:
+    scatter_from_coords_tiled (block-local numpy) has the semantics of
+    the SQL scatter_from_coords (block-size invariant, <= 2 ulp numeric
+    difference)."""
 
     def _coords(self, spark, w, h):
         from pyspark.sql import functions as F
@@ -341,7 +343,8 @@ class TestTiledScatter:
 
     def test_matches_sql_scatter_any_block_size(self, spark):
         from xcube_resampling_spark.crs import CRS_WGS84
-        from xcube_resampling_spark.operators.rectify import (
+
+        from .reference_kernels import (
             scatter_from_coords,
             scatter_from_coords_tiled,
         )
@@ -376,7 +379,8 @@ class TestTiledScatter:
         from pyspark.sql import functions as F
 
         from xcube_resampling_spark.crs import CRS_WGS84
-        from xcube_resampling_spark.operators.rectify import (
+
+        from .reference_kernels import (
             scatter_from_coords,
             scatter_from_coords_tiled,
         )
@@ -462,11 +466,11 @@ class TestRectifyDistributedCoords:
 
 
 class TestRectifyFused:
-    """rectify_fused_tiled = scatter_from_coords_tiled + gather_var fused
-    into two applyInPandas shuffles; must be value-identical to the
-    un-fused pipeline at every num_t (one and several presence words),
-    including NaN coords, SQL-NULL and absent source pixels, genuine-NaN
-    values and non-NaN fill."""
+    """rectify_fused_tiled fuses the reference scatter_from_coords_tiled +
+    gather_var (tests/reference_kernels.py) into two applyInPandas
+    shuffles; must be value-identical to them at every num_t (one and
+    several presence words), including NaN coords, SQL-NULL and absent
+    source pixels, genuine-NaN values and non-NaN fill."""
 
     @staticmethod
     def _swath(spark):
@@ -508,10 +512,10 @@ class TestRectifyFused:
         from xcube_resampling_spark.crs import CRS_WGS84
         from xcube_resampling_spark.operators.rectify import (
             fuse_coords_values,
-            gather_var,
             rectify_fused_tiled,
-            scatter_from_coords_tiled,
         )
+
+        from .reference_kernels import gather_var, scatter_from_coords_tiled
 
         coords, values_df, src_size, num_t = data
         tgm = GridMapping.regular((60, 70), (10.0, 47.0), 0.045, CRS_WGS84)
@@ -723,10 +727,10 @@ class TestOffTargetQuadSkew:
         from xcube_resampling_spark.crs import CRS_WGS84
         from xcube_resampling_spark.operators.rectify import (
             fuse_coords_values,
-            gather_var,
             rectify_fused_tiled,
-            scatter_from_coords_tiled,
         )
+
+        from .reference_kernels import gather_var, scatter_from_coords_tiled
 
         rng = np.random.default_rng(23)
         w_s, h_s = 41, 47
@@ -841,3 +845,34 @@ class TestKernelChunkingInternals:
             for a, b in zip(ref, got):
                 assert a.dtype == b.dtype
                 assert np.array_equal(a, b, equal_nan=True)
+
+
+def test_driver_rectify_queries_run_fused_kernels(spark, tmp_path):
+    """Every rectify_* driver query runs the production kernels: its
+    physical plan holds both rectify_fused_tiled kernels.  The queries
+    read only event_id and value of the events table, so a synthetic
+    table of the driver's shape stands in for the test data."""
+    import sys
+
+    import pandas as pd
+
+    sys.path.insert(0, ".")
+    import __spark_entry__ as entry
+
+    rng = np.random.default_rng(5)
+    n = 2000
+    pd.DataFrame({
+        "event_id": np.arange(n, dtype=np.int64),
+        "value": rng.normal(size=n),
+    }).to_parquet(tmp_path / "events.parquet")
+
+    queries = entry.queries()
+    names = [q for q in queries if q.startswith("rectify_")]
+    assert len(names) == 9
+
+    def runs_fused(name):
+        df = queries[name](spark, str(tmp_path))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return "scatter_kernel" in plan and "densify_kernel" in plan
+
+    assert [q for q in names if not runs_fused(q)] == []

@@ -346,9 +346,10 @@ class TestGatherInterpFused:
         from pyspark.sql import functions as F
 
         from xcube_resampling_spark.operators.reproject import (
-            _gather_interp,
             gather_interp_fused,
         )
+
+        from .reference_kernels import _gather_interp
 
         src, grid2d, src_size, num_t = data
         ref = _gather_interp(
@@ -378,9 +379,10 @@ class TestGatherInterpFused:
 
         from xcube_resampling_spark.operators.reproject import (
             _TGT_CHUNK,
-            _gather_interp,
             gather_interp_fused,
         )
+
+        from .reference_kernels import _gather_interp
 
         rng = np.random.default_rng(29)
         src_w, src_h = 64, 48
@@ -470,9 +472,10 @@ class TestOutOfSourceSkew:
         from pyspark.sql import functions as F
 
         from xcube_resampling_spark.operators.reproject import (
-            _gather_interp,
             gather_interp_fused,
         )
+
+        from .reference_kernels import _gather_interp
 
         rng = np.random.default_rng(7)
         src_w, src_h = 16, 24

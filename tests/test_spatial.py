@@ -134,49 +134,44 @@ class TestResampleInSpace:
         assert out is source_ds
 
 
-class TestPlanResample:
-    """plans.plan_resample mirrors the dispatcher's routing."""
+class TestCrsEquivalenceRoute:
+    """Route selection compares CRS definitions, not display names: a
+    UTM CRS read back from CF attributes is named "Transverse Mercator",
+    the one built from its EPSG code "WGS 84 / UTM zone 32N"."""
 
-    def test_routes(self, spark):
-        import numpy as np
-
-        from xcube_resampling_spark.crs import CRS, CRS_WGS84
-        from xcube_resampling_spark.plans import plan_resample
-
-        regular = GridMapping.regular((8, 6), (0.0, 0.0), 1.0, CRS_WGS84)
-        shifted = GridMapping.regular((8, 6), (2.0, 1.0), 1.0, CRS_WGS84)
-        utm = GridMapping.regular(
-            (8, 6), (500000.0, 5000000.0), 100.0, CRS.from_epsg(32632)
+    def test_cf_roundtrip_crs_takes_affine_route(self, spark):
+        from xcube_resampling_spark.crs import CRS
+        from xcube_resampling_spark.operators.affine import (
+            affine_transform_dataset,
         )
-        jj, ii = np.meshgrid(np.arange(4), np.arange(4), indexing="ij")
-        irregular = GridMapping.from_coords_2d(
-            ii + 0.3 * jj, 10.0 - jj + 0.1 * ii, CRS_WGS84
+        from xcube_resampling_spark.operators.utils import (
+            can_apply_affine_transform,
         )
 
-        assert plan_resample(irregular, regular).route == "rectify"
-        assert plan_resample(regular, None).route == "identity"
-        assert plan_resample(regular, regular).route == "identity"
-        assert plan_resample(regular, shifted).route == "affine"
-        plan = plan_resample(utm, regular)
-        assert plan.route == "reproject"
-
-    def test_pre_downscale_triggers_when_source_finer(self, spark):
-        from xcube_resampling_spark.crs import CRS, CRS_WGS84
-        from xcube_resampling_spark.plans import plan_pre_downscale
-
-        fine_src = GridMapping.regular(
-            (1000, 1000), (500000.0, 5000000.0), 10.0, CRS.from_epsg(32632)
+        source_ds = create_5x5_dataset_regular_utm(spark)
+        utm = CRS.from_epsg(32632)
+        cf_utm = CRS.from_cf(utm.to_cf())
+        assert cf_utm.name != utm.name
+        source_gm = GridMapping.regular(
+            (5, 5), (565250.0, 5933850.0), 100.0, utm
         )
-        coarse_dst = GridMapping.regular((10, 10), (9.0, 45.0), 0.1,
-                                         CRS_WGS84)
-        down = plan_pre_downscale(fine_src, coarse_dst)
-        assert down is not None
-        assert down[0] < 1.0
-        # target at least as fine as the source: no downscale
-        # (0.0009 deg =~ 100 m in y at 45N; scales stay >= SCALE_LIMIT)
-        same = plan_pre_downscale(
-            GridMapping.regular((100, 100), (500000.0, 5000000.0), 100.0,
-                                CRS.from_epsg(32632)),
-            GridMapping.regular((100, 100), (9.0, 45.0), 0.0009, CRS_WGS84),
+        # shifted by one pixel in x and y, same CRS through CF
+        target_gm = GridMapping.regular(
+            (5, 5), (565350.0, 5933750.0), 100.0, cf_utm
         )
-        assert same is None
+        assert can_apply_affine_transform(source_gm, target_gm)
+
+        got = resample_in_space(
+            source_ds, target_gm, source_gm=source_gm, interp_methods=0
+        ).to_numpy("band_1", (5, 5))
+        ref = affine_transform_dataset(
+            source_ds,
+            GridMapping.regular((5, 5), (565350.0, 5933750.0), 100.0, utm),
+            source_gm=source_gm,
+            interp_methods=0,
+        ).to_numpy("band_1", (5, 5))
+        np.testing.assert_array_equal(got, ref)
+        # the shift moves the image one pixel left and up; the
+        # uncovered last row and column are fill
+        band_1 = np.arange(25).reshape((5, 5))
+        np.testing.assert_array_equal(got[:4, :4], band_1[1:, 1:])

@@ -1,4 +1,4 @@
-"""Affine resampling between regular grids sharing a CRS -- pure Spark SQL.
+"""Affine resampling between regular grids sharing a CRS.
 
 Parity reference: /root/reference/xcube_resampling/affine.py:52-362.
 The reference maps each target pixel to fractional source array coordinates
@@ -7,21 +7,28 @@ or 1 (bilinear) with ``dask_image.ndinterp.affine_transform``; downscaling
 first upsamples by a residual factor, then reduces k x k windows with
 ``da.coarsen`` (affine.py:277-313).
 
-Here the same semantics are expressed relationally, with no UDFs:
+Here one shuffle and one ``applyInPandas`` numpy kernel do the gather
+(:func:`gather_fused`):
 
-* the target grid is generated distributed (``spark.range``),
-* fractional source coordinates are column arithmetic
-  (``src_if = i_scale * i + i_off``),
-* the gather is a single equi-join against the source pixel table
-  (1 neighbor for nearest, 4 exploded neighbors + pivot for bilinear),
+* source pixels become wide per-t rows (NULL -> fill in the JVM) and are
+  routed to every target j-block whose rows can reference them (the
+  inverse-affine row range plus slack); one sentinel row per block makes
+  every block appear,
+* ``kernel`` builds the block's dense source plane and evaluates the
+  whole order-0/1 spline in numpy for the block's target rows -- the
+  target grid is never a table and there is no join,
 * out-of-bounds semantics replicate scipy's ``mode="constant"``:
   a coordinate outside ``[0, n-1]`` yields the fill value; an interior
   coordinate blends ``v0 + f*(v1-v0)``, which propagates data NaNs even at
   zero weight exactly like the spline evaluation does,
-* downscale = the same gather on a k-times finer intermediate grid followed
-  by a ``GROUP BY (j div k, i div k)`` window aggregation (coarsen.py here),
-  with positional reducers (first/last/center) short-circuited to a single
-  gathered subpixel per output pixel -- no shuffle, no window blow-up.
+* downscale = the same gather on a k-times finer intermediate grid, with
+  the k x k window reduction done inside the kernel for the distributive
+  float reducers, by ``aggregate_windows`` (coarsen.py) otherwise, and
+  positional reducers (first/last/center) short-circuited to a single
+  gathered subpixel per output pixel.
+
+The equi-join formulation of the same gather, ``_gather``, lives in
+``tests/reference_kernels.py`` as the equivalence reference.
 """
 
 from __future__ import annotations
@@ -32,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import AffineTransformMatrix, is_int_dtype
-from ..dataset import SparkDataset, Variable, grid_df
+from ..dataset import PIXEL_SCHEMA, SparkDataset, Variable
 from ..gridmapping import GridMapping
 from .coarsen import POSITIONAL_METHODS, aggregate_windows, position_for
 from .utils import (
@@ -277,151 +284,6 @@ def _snap(v: float, tol: float = 1e-9) -> float:
     return float(v)
 
 
-def _gather(
-    grid: DataFrame,
-    src_df: DataFrame,
-    matrix4: tuple[float, float, float, float],
-    source_size: tuple[int, int],
-    interp_method: int,
-    recover_nan: bool,
-    fill_value,
-    idx_cols: tuple[str, str],
-) -> DataFrame:
-    """Evaluate the order-0/1 spline gather as join + expressions.
-
-    ``idx_cols`` names the (row, col) columns of *grid* used as target array
-    indices; output keeps grid's (t, j, i).
-    """
-    i_scale, i_off, j_scale, j_off = matrix4
-    src_w, src_h = source_size
-    fill = F.lit(float(fill_value)).cast("double")
-    jj, ii = (F.col(idx_cols[0]), F.col(idx_cols[1]))
-
-    src_if = (F.lit(float(i_scale)) * ii + F.lit(float(i_off)))
-    src_jf = (F.lit(float(j_scale)) * jj + F.lit(float(j_off)))
-
-    if interp_method == 0:
-        si = F.floor(src_if + 0.5).cast("int")
-        sj = F.floor(src_jf + 0.5).cast("int")
-        g = grid.select(
-            "t", "j", "i", si.alias("si"), sj.alias("sj"),
-            (
-                (si >= 0) & (si <= src_w - 1) & (sj >= 0) & (sj <= src_h - 1)
-            ).alias("in_b"),
-        )
-        src = src_df.select(
-            F.col("t").alias("st"), F.col("j").alias("sj2"),
-            F.col("i").alias("si2"), F.col("value").alias("sv"),
-        )
-        joined = g.join(
-            src,
-            (g["t"] == src["st"]) & (g["sj"] == src["sj2"])
-            & (g["si"] == src["si2"]),
-            "left",
-        )
-        return joined.select(
-            "t", "j", "i",
-            F.when(
-                F.col("in_b"), F.coalesce(F.col("sv"), fill)
-            ).otherwise(fill).alias("value"),
-        )
-
-    # bilinear (order 1)
-    in_b = (
-        (src_if >= 0) & (src_if <= src_w - 1)
-        & (src_jf >= 0) & (src_jf <= src_h - 1)
-    )
-    i0 = F.least(F.floor(src_if), F.lit(src_w - 2)).cast("int")
-    j0 = F.least(F.floor(src_jf), F.lit(src_h - 2)).cast("int")
-    fx = src_if - i0
-    fy = src_jf - j0
-
-    g = grid.select(
-        "t", "j", "i",
-        i0.alias("i0"), j0.alias("j0"),
-        fx.alias("fx"), fy.alias("fy"), in_b.alias("in_b"),
-    ).filter(F.col("in_b"))  # out-of-bounds pixels re-added as fill below
-
-    tags = F.array(
-        *[
-            F.struct(F.lit(dj).alias("dj"), F.lit(di).alias("di"))
-            for dj in (0, 1)
-            for di in (0, 1)
-        ]
-    )
-    nbrs = g.select(
-        "t", "j", "i", "fx", "fy",
-        F.explode(tags).alias("tag"),
-        "i0", "j0",
-    ).select(
-        "t", "j", "i", "fx", "fy",
-        F.col("tag.dj").alias("dj"), F.col("tag.di").alias("di"),
-        (F.col("j0") + F.col("tag.dj")).alias("sj"),
-        (F.col("i0") + F.col("tag.di")).alias("si"),
-    )
-    src = src_df.select(
-        F.col("t").alias("st"), F.col("j").alias("sj2"),
-        F.col("i").alias("si2"), F.col("value").alias("sv"),
-    )
-    joined = nbrs.join(
-        src,
-        (nbrs["t"] == src["st"]) & (nbrs["sj"] == src["sj2"])
-        & (nbrs["si"] == src["si2"]),
-        "left",
-    ).select(
-        "t", "j", "i", "fx", "fy", "dj", "di",
-        F.coalesce(F.col("sv"), fill).alias("sv"),
-    )
-
-    def pick(dj, di):
-        return F.max(
-            F.when((F.col("dj") == dj) & (F.col("di") == di), F.col("sv"))
-        )
-
-    piv = joined.groupBy("t", "j", "i", "fx", "fy").agg(
-        pick(0, 0).alias("v00"),
-        pick(0, 1).alias("v01"),
-        pick(1, 0).alias("v10"),
-        pick(1, 1).alias("v11"),
-    )
-
-    fx_c, fy_c = F.col("fx"), F.col("fy")
-
-    def blend(v00, v01, v10, v11):
-        vu0 = v00 + fx_c * (v01 - v00)
-        vu1 = v10 + fx_c * (v11 - v10)
-        return vu0 + fy_c * (vu1 - vu0)
-
-    if recover_nan:
-        def z(c):  # NaN -> 0 (zero-filled image)
-            return F.when(F.isnan(c), F.lit(0.0)).otherwise(c)
-
-        def m(c):  # inverse NaN mask
-            return F.when(F.isnan(c), F.lit(0.0)).otherwise(F.lit(1.0))
-
-        scaled = blend(*[z(F.col(c)) for c in ("v00", "v01", "v10", "v11")])
-        norm = blend(*[m(F.col(c)) for c in ("v00", "v01", "v10", "v11")])
-        value = F.when(
-            F.abs(norm) <= F.lit(1e-8), F.lit(float("nan"))
-        ).otherwise(scaled / norm)
-    else:
-        value = blend(
-            F.col("v00"), F.col("v01"), F.col("v10"), F.col("v11")
-        )
-
-    computed = piv.select("t", "j", "i", value.alias("value"))
-
-    # re-add out-of-bounds target pixels as fill
-    oob = grid.select(
-        "t", "j", "i",
-        i0.alias("_i0"), src_if.alias("_sif"), src_jf.alias("_sjf"),
-    ).filter(~(
-        (F.col("_sif") >= 0) & (F.col("_sif") <= src_w - 1)
-        & (F.col("_sjf") >= 0) & (F.col("_sjf") <= src_h - 1)
-    )).select("t", "j", "i", fill.alias("value"))
-    return computed.unionByName(oob)
-
-
 def gather_fused(
     spark: SparkSession,
     src_df: DataFrame,
@@ -436,7 +298,8 @@ def gather_fused(
     block_rows: int | None = None,
     window_reduce: tuple[int, int, str] | None = None,
 ) -> DataFrame:
-    """Single-shuffle block-local twin of :func:`_gather`.
+    """Single-shuffle block-local order-0/1 spline gather through
+    ``matrix4``.
 
     ``window_reduce`` = (k_j, k_i, method) makes the kernel reduce each
     k_j x k_i window of its dense block in numpy and emit one partial
@@ -457,7 +320,8 @@ def gather_fused(
     the identity.  Blocks span full grid rows -- fine up to ~10^5-wide
     scenes; wider targets would block in i as well.
 
-    Value semantics are _gather's exactly: per-neighbor
+    Values equal those of the equi-join reference ``_gather`` in
+    tests/reference_kernels.py exactly: per-neighbor
     ``coalesce(value, fill)`` (SQL NULL or absent pixel -> fill, genuine
     NaN propagates through the blend), nearest rounds with
     ``floor(x + 0.5)`` and bounds-checks the rounded index, bilinear
@@ -529,12 +393,7 @@ def gather_fused(
     )
 
     out_schema = T.StructType(
-        [
-            T.StructField("t", T.IntegerType(), False),
-            T.StructField("j", T.IntegerType(), False),
-            T.StructField("i", T.IntegerType(), False),
-            T.StructField("value", T.DoubleType(), True),
-        ]
+        PIXEL_SCHEMA.fields
         + (
             [T.StructField("cnt", T.LongType(), True)]
             if window_reduce is not None else []
@@ -582,7 +441,7 @@ def gather_fused(
             j1c = np.clip(j0 + 1 - sj_lo, 0, sj_n - 1)
             i0c = np.clip(i0, 0, src_w - 1)
             i1c = np.clip(i0 + 1, 0, src_w - 1)
-            # per-corner window membership (mirrors _gather's per-neighbor
+            # per-corner window membership (the per-neighbor
             # coalesce(value, fill)): a stencil row absent from a sparse
             # src_df contributes fill instead of aliasing a present row
             j0_in = ((j0 >= sj_lo) & (j0 < sj_lo + sj_n))[None, :, None]
@@ -684,8 +543,8 @@ def gather_fused(
         # fragment" for min/max (the caller's F.min/F.max skip it)
         return out
     # the Arrow hop converts the kernel's NaN doubles to SQL NULLs (pandas
-    # uses NaN as its null sentinel); _gather's contract is NaN and no
-    # output is legitimately NULL, so restore
+    # uses NaN as its null sentinel); the operator's contract is NaN and
+    # no output is legitimately NULL, so restore
     return out.withColumn(
         "value", F.coalesce(F.col("value"), F.lit(float("nan")))
     )

@@ -1,37 +1,40 @@
-"""CRS reprojection of regular grids -- Spark SQL + one vectorized UDF.
+"""CRS reprojection of regular grids.
 
 Parity reference: /root/reference/xcube_resampling/reproject.py:51-530.
 The reference transforms each target pixel center into the source CRS
 (pyproj), computes fractional source indices and gathers/interpolates
-per-tile with padded dense blocks.  Spark-first formulation:
+per-tile with padded dense blocks.  Spark formulation:
 
 * target pixel centers are generated distributed and transformed by a single
-  Arrow-batched pandas UDF (the only non-SQL step -- CRS math cannot be
-  expressed in Catalyst),
+  Arrow-batched pandas UDF (``_tr``; CRS math cannot be expressed in
+  Catalyst),
 * fractional source indices are column arithmetic against the source grid
   origin (identical to reproject.py:278-279),
-* the gather is an equi-join on (t, floor/ceil j, floor/ceil i); the
-  reference's per-tile padded blocks (reproject.py:499-530) are replaced by
-  per-neighbor bounds checks -> fill value, which avoids materializing dense
-  padded intermediates entirely (a genuine win at scale),
-* interpolation blends (nearest via banker's rounding like np.rint,
-  bilinear, two-triangle 'triangular') are whole-stage-codegen expressions
-  (reproject.py:281-328).
+* the gather is one cogrouped ``applyInPandas`` numpy kernel
+  (:func:`gather_interp_fused`): source rows and target pixels are both
+  bucketed by source j-block, and each block interpolates its targets
+  (nearest via banker's rounding like np.rint, bilinear, two-triangle
+  'triangular'; reproject.py:281-328) with per-corner bounds checks ->
+  fill value in place of the reference's padded blocks
+  (reproject.py:499-530),
 * if the source is finer than the target (SCALE_LIMIT, reproject.py:338-382)
   the source is first clipped (filter pushdown) and affine-downscaled.
+
+The equi-join formulation of the gather, ``_gather_interp``, lives in
+``tests/reference_kernels.py`` as the equivalence reference.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..constants import SCALE_LIMIT, is_int_dtype
 from ..crs import CRS, Transformer
-from ..dataset import SparkDataset, Variable, grid_df
+from ..dataset import PIXEL_SCHEMA, SparkDataset, Variable, grid_df
 from ..gridmapping import GridMapping
 from .affine import affine_transform_dataset
 from .utils import (
@@ -224,7 +227,7 @@ def reproject_dataset(
             fill = get_fill_value(fill_values, name, var.dtype)
             num_t = num_t_of(source_ds, var)
             # cogrouped single-pass gather (equivalence-tested against the
-            # join+pivot _gather_interp, which stays as the SQL reference)
+            # join+pivot _gather_interp in tests/reference_kernels.py)
             df = gather_interp_fused(
                 grid2d, var.df, spark, (src_w, src_h), num_t, interp,
                 fill, is_int_dtype(var.dtype),
@@ -254,124 +257,6 @@ def reproject_dataset(
         attrs=dict(source_ds.attrs),
         yx_dims=(target_gm.xy_dim_names[1], target_gm.xy_dim_names[0]),
     )
-
-
-def _gather_interp(
-    grid2d: DataFrame,
-    src_df: DataFrame,
-    spark,
-    source_size: tuple[int, int],
-    num_t: int,
-    interp_method: str,
-    fill_value,
-    is_int: bool,
-) -> DataFrame:
-    """Join-based gather + interpolation expressions
-    (reference reproject.py:268-335 `_reproject_block`)."""
-    src_w, src_h = source_size
-    fill = F.lit(float(fill_value)).cast("double")
-
-    ts = spark.range(num_t).select(F.col("id").cast("int").alias("t"))
-    grid = grid2d.crossJoin(ts)
-
-    src = src_df.select(
-        F.col("t").alias("st"), F.col("j").alias("sj2"),
-        F.col("i").alias("si2"), F.col("value").alias("sv"),
-    )
-
-    if interp_method == "nearest":
-        si = F.bround(F.col("ix")).cast("int")
-        sj = F.bround(F.col("iy")).cast("int")
-        g = grid.select(
-            "t", "j", "i", si.alias("si"), sj.alias("sj"),
-            (
-                (si >= 0) & (si <= src_w - 1) & (sj >= 0) & (sj <= src_h - 1)
-            ).alias("in_b"),
-        )
-        joined = g.join(
-            src,
-            (g["t"] == src["st"]) & (g["sj"] == src["sj2"])
-            & (g["si"] == src["si2"]),
-            "left",
-        )
-        return joined.select(
-            "t", "j", "i",
-            F.when(
-                F.col("in_b"), F.coalesce(F.col("sv"), fill)
-            ).otherwise(fill).alias("value"),
-        )
-
-    if interp_method not in ("bilinear", "triangular"):
-        raise NotImplementedError(
-            f"{_NOT_IMPLEMENTED_ERROR}, was '{interp_method}'."
-        )
-
-    i0 = F.floor(F.col("ix")).cast("int")
-    i1 = F.ceil(F.col("ix")).cast("int")
-    j0 = F.floor(F.col("iy")).cast("int")
-    j1 = F.ceil(F.col("iy")).cast("int")
-    g = grid.select(
-        "t", "j", "i",
-        i0.alias("i0"), i1.alias("i1"), j0.alias("j0"), j1.alias("j1"),
-        (F.col("ix") - i0).alias("fx"),
-        (F.col("iy") - j0).alias("fy"),
-    )
-    tags = F.array(
-        *[
-            F.struct(F.lit(dj).alias("dj"), F.lit(di).alias("di"))
-            for dj in (0, 1)
-            for di in (0, 1)
-        ]
-    )
-    nbrs = g.select(
-        "t", "j", "i", "fx", "fy", F.explode(tags).alias("tag"),
-        "i0", "i1", "j0", "j1",
-    ).select(
-        "t", "j", "i", "fx", "fy",
-        F.col("tag.dj").alias("dj"), F.col("tag.di").alias("di"),
-        F.when(F.col("tag.dj") == 0, F.col("j0"))
-        .otherwise(F.col("j1")).alias("sj"),
-        F.when(F.col("tag.di") == 0, F.col("i0"))
-        .otherwise(F.col("i1")).alias("si"),
-    )
-    joined = nbrs.join(
-        src,
-        (nbrs["t"] == src["st"]) & (nbrs["sj"] == src["sj2"])
-        & (nbrs["si"] == src["si2"]),
-        "left",
-    ).select(
-        "t", "j", "i", "fx", "fy", "dj", "di",
-        # out-of-source neighbors read the fill value, like the padded
-        # gather blocks of the reference (reproject.py:516)
-        F.coalesce(F.col("sv"), fill).alias("sv"),
-    )
-
-    def pick(dj, di):
-        return F.max(
-            F.when((F.col("dj") == dj) & (F.col("di") == di), F.col("sv"))
-        )
-
-    piv = joined.groupBy("t", "j", "i", "fx", "fy").agg(
-        pick(0, 0).alias("v00"),
-        pick(0, 1).alias("v01"),
-        pick(1, 0).alias("v10"),
-        pick(1, 1).alias("v11"),
-    )
-    fx, fy = F.col("fx"), F.col("fy")
-    v00, v01 = F.col("v00"), F.col("v01")
-    v10, v11 = F.col("v10"), F.col("v11")
-    if interp_method == "bilinear":
-        vu0 = v00 + fx * (v01 - v00)
-        vu1 = v10 + fx * (v11 - v10)
-        value: Column = vu0 + fy * (vu1 - vu0)
-    else:  # triangular (reference reproject.py:285-314)
-        closest = v00 + fx * (v01 - v00) + fy * (v10 - v00)
-        opposite = v11 + (1.0 - fx) * (v10 - v11) + (1.0 - fy) * (v01 - v11)
-        value = F.when(fx + fy < 1.0, closest).otherwise(opposite)
-    if is_int:
-        # numpy assignment into an int-dtype output truncates toward zero
-        value = value.cast("long").cast("double")
-    return piv.select("t", "j", "i", value.alias("value"))
 
 
 def _downscale_source_dataset(
@@ -492,7 +377,8 @@ def gather_interp_fused(
     is_int: bool,
     block_rows: int | None = None,
 ) -> DataFrame:
-    """Cogrouped single-pass twin of :func:`_gather_interp`.
+    """Cogrouped single-pass gather + interpolation of the source
+    pixels at the fractional indices (ix, iy) of ``grid2d``.
 
     Both inputs are bucketed by source j-block (target pixels by
     ``floor(iy) // B``, source rows by ``j // B`` with the first row of
@@ -502,7 +388,8 @@ def gather_interp_fused(
     shuffles of unexpanded rows replace the 4-way neighbor explode + join
     + pivot (which shuffled 4 x num_t rows per target pixel).
 
-    Value semantics are _gather_interp's exactly: nearest rounds
+    Values equal those of the join+pivot reference ``_gather_interp`` in
+    tests/reference_kernels.py exactly: nearest rounds
     half-to-even (``bround`` == ``np.rint``) and bounds-checks the rounded
     index; bilinear/triangular read ``floor``/``ceil`` corners with
     per-corner out-of-source -> fill (the reference's padded gather
@@ -596,20 +483,11 @@ def gather_interp_fused(
         ).alias("blk"),
     )
 
-    out_schema = T.StructType(
-        [
-            T.StructField("t", T.IntegerType(), False),
-            T.StructField("j", T.IntegerType(), False),
-            T.StructField("i", T.IntegerType(), False),
-            T.StructField("value", T.DoubleType(), True),
-        ]
-    )
-
     def kernel(src_pdf, tgt_pdf):
         n_tgt = len(tgt_pdf)
         if n_tgt == 0:
             return pd.DataFrame(
-                {f.name: [] for f in out_schema.fields}
+                {f.name: [] for f in PIXEL_SCHEMA.fields}
             )
         V, sj_lo, sj_n = source_plane(src_pdf, num_t, src_w, fill)
 
@@ -666,7 +544,7 @@ def gather_interp_fused(
                         + (1.0 - fy) * (v01 - v11)
                     )
                     o = np.where(fx + fy < 1.0, closest, opposite)
-                # parity with _gather_interp: the int cast applies only
+                # as in the reference: the int cast applies only
                 # to interpolated (blended) outputs; nearest returns the
                 # stored value unchanged
                 if is_int:
@@ -686,7 +564,7 @@ def gather_interp_fused(
     out = (
         src_b.groupBy("blk")
         .cogroup(tgt_b.groupBy("blk"))
-        .applyInPandas(lambda left, right: kernel(left, right), out_schema)
+        .applyInPandas(lambda left, right: kernel(left, right), PIXEL_SCHEMA)
     )
     # Arrow hop NaN -> NULL restoration (operator contract is NaN)
     return out.withColumn(

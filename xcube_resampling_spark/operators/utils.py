@@ -225,12 +225,21 @@ def is_equal_crs(source_gm: GridMapping, target_gm: GridMapping) -> bool:
     """Parity: reference utils.py:187-189, EXCEPT the both-geographic
     shortcut applies only to plain lat-lon CRSs: a rotated-pole grid is
     degree-based (pyproj calls it geographic) but still needs the pole
-    rotation to reach true lon/lat."""
-    geographic = (
-        source_gm.crs.kind == "geographic"
-        and target_gm.crs.kind == "geographic"
+    rotation to reach true lon/lat.
+
+    Compares definitions only (kind, ellipsoid, params, towgs84), never
+    display names -- PROJ's "equivalent" test, which the reference's
+    pyproj ``==`` applies: a UTM CRS read back from CF attributes is
+    named "Transverse Mercator" but is the same CRS."""
+    src, dst = source_gm.crs, target_gm.crs
+    if src.kind == "geographic" and dst.kind == "geographic":
+        return True
+    return (
+        src.kind == dst.kind
+        and src.ellipsoid == dst.ellipsoid
+        and src.params == dst.params
+        and src.towgs84 == dst.towgs84
     )
-    return geographic or source_gm.crs.equals(target_gm.crs)
 
 
 def clip_pixels_by_ij_bbox(df: DataFrame, ij_bbox) -> DataFrame:
