@@ -354,6 +354,32 @@ def test_gather_fused_single_shuffle_plan(spark):
     assert plan.count("Exchange") == 1
 
 
+@pytest.mark.parametrize("agg", ["mean", "sum"])
+def test_window_reduce_independent_of_plane_count(spark, agg):
+    """A plane's downscaled values do not depend on how many planes ride
+    with it: each plane of a 3-plane stack equals that plane resampled as
+    its own 2-D frame, bit for bit (the window sums of the kernel-fused
+    reduction run in one order whatever num_t is)."""
+    from xcube_resampling_spark.dataset import numpy_to_pixels
+    from xcube_resampling_spark.operators.affine import resample_pixels
+
+    stack = np.random.default_rng(7).normal(size=(3, 12, 18)) * 1e3 + 0.1
+
+    def downscale(arr, num_t):
+        df = resample_pixels(
+            spark, numpy_to_pixels(spark, arr), ((3, 0, 0), (0, 3, 0)),
+            (18, 12), (6, 4), num_t, 1, agg, False, float("nan"), False,
+        )
+        out = np.full((num_t, 4, 6), np.nan)
+        for r in df.collect():
+            out[r.t, r.j, r.i] = r.value
+        return out
+
+    together = downscale(stack, 3)
+    for k in range(3):
+        np.testing.assert_array_equal(together[k], downscale(stack[k], 1)[0])
+
+
 def test_pack_ij_bound_check():
     """The (j, i) -> int64 routing pack is exact only below 2^31 in each
     axis: grids at or past it are refused on the driver, before any

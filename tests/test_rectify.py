@@ -465,6 +465,102 @@ class TestRectifyDistributedCoords:
         np.testing.assert_almost_equal(out.to_numpy("rad", (4, 4)), ref)
 
 
+class TestDownscaleCoords:
+    """The pre-downscale resamples x and y as the two planes of one
+    resample_pixels call; the result is bit-identical to x and y each
+    resampled as its own one-plane frame, NaN coordinates included."""
+
+    @pytest.fixture(scope="class")
+    def swath(self, spark):
+        from pyspark.sql import functions as F
+
+        from xcube_resampling_spark.gridmapping.distributed import (
+            GridMappingDF,
+        )
+
+        w, h = 18, 12
+        pix = spark.range(w * h).select(
+            (F.col("id") / w).cast("int").alias("j"),
+            (F.col("id") % w).cast("int").alias("i"),
+        )
+        nan_at = (
+            ((F.col("j") == 4) & (F.col("i") == 7))
+            | ((F.col("j") == 0) & (F.col("i") == 0))
+        )
+        coords = pix.select(
+            "j", "i",
+            F.when(nan_at, F.lit(float("nan"))).otherwise(
+                0.01 * F.col("i") + 0.003 * F.col("j") + 0.1234567
+            ).alias("x"),
+            (F.lit(60.0) - 0.01 * F.col("j") + 0.002 * F.col("i"))
+            .alias("y"),
+        )
+        gm_df = GridMappingDF(
+            coords=coords, size=(w, h), crs=CRS_WGS84,
+            xy_res=(0.01, 0.01), xy_bbox=(0.1, 59.8, 0.34, 60.05),
+            is_lon_360=False, is_j_axis_up=False,
+        )
+        source_ds = SparkDataset.from_numpy(
+            spark,
+            data_vars={"rad": (("y", "x"), np.ones((h, w)))},
+            yx_dims=("y", "x"),
+        )
+        target_gm = GridMapping.regular(
+            size=(6, 4), xy_min=(0.1, 59.8), xy_res=0.03, crs=CRS_WGS84
+        )
+        return source_ds, gm_df, target_gm
+
+    @staticmethod
+    def _exact(v):
+        # None (SQL NULL) and NaN stay distinct; floats compare by value
+        return "null" if v is None else "nan" if np.isnan(v) else v
+
+    @pytest.mark.parametrize("interp, agg", [
+        ("bilinear", "mean"), ("bilinear", "max"), ("bilinear", "median"),
+        ("bilinear", "first"), ("nearest", "mean"),
+    ])
+    def test_two_plane_coords_match_one_plane_passes(
+        self, spark, swath, interp, agg
+    ):
+        from pyspark.sql import functions as F
+
+        from xcube_resampling_spark.constants import INTERP_METHOD_MAPPING
+        from xcube_resampling_spark.operators.affine import resample_pixels
+        from xcube_resampling_spark.operators.rectify import (
+            _downscale_source_dataset,
+        )
+
+        source_ds, gm_df, target_gm = swath
+        _, coords, size = _downscale_source_dataset(
+            source_ds, gm_df, target_gm, interp, agg, False
+        )
+        assert size == (6, 4)
+        got = {
+            (r.j, r.i): (self._exact(r.x), self._exact(r.y))
+            for r in coords.collect()
+        }
+        x_scale = gm_df.x_res / target_gm.x_res
+        y_scale = gm_df.y_res / target_gm.y_res
+        one_plane = {}
+        for c in ("x", "y"):
+            df = resample_pixels(
+                spark,
+                gm_df.coords.select(
+                    F.lit(0).alias("t"), "j", "i", F.col(c).alias("value")
+                ),
+                ((1 / x_scale, 0, 0), (0, 1 / y_scale, 0)),
+                gm_df.size, size, 1,
+                INTERP_METHOD_MAPPING[interp], agg, False, float("nan"),
+                False,
+            )
+            for r in df.collect():
+                one_plane.setdefault((r.j, r.i), []).append(
+                    self._exact(r.value)
+                )
+        assert len(got) == 6 * 4
+        assert got == {k: tuple(v) for k, v in one_plane.items()}
+
+
 class TestRectifyFused:
     """rectify_fused_tiled fuses the reference scatter_from_coords_tiled +
     gather_var (tests/reference_kernels.py) into two applyInPandas

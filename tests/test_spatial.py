@@ -1,8 +1,11 @@
 """Dispatcher goldens replicating /root/reference/tests/test_spatial.py."""
 
 import logging
+import time
+import uuid
 
 import numpy as np
+import pytest
 
 from xcube_resampling_spark.crs import CRS_WGS84
 from xcube_resampling_spark.gridmapping import GridMapping
@@ -10,6 +13,7 @@ from xcube_resampling_spark.operators.spatial import resample_in_space
 
 from .sampledata import (
     create_2x2_dataset_with_irregular_coords,
+    create_2x5x5_dataset_regular_utm,
     create_4x4_dataset_with_irregular_coords,
     create_5x5_dataset_regular_utm,
     create_8x6_dataset_with_regular_coords,
@@ -175,3 +179,99 @@ class TestCrsEquivalenceRoute:
         # uncovered last row and column are fill
         band_1 = np.arange(25).reshape((5, 5))
         np.testing.assert_array_equal(got[:4, :4], band_1[1:, 1:])
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs that ``fn()`` launches from this thread, counted by the
+    status tracker under a fresh job group."""
+    sc = spark.sparkContext
+    group, marker = (f"{tag}-{uuid.uuid4().hex}" for tag in ("fn", "mark"))
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(marker, "marker")
+        spark.range(1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the tracker is fed asynchronously, in job order: once the marker
+    # job shows, every job started before it shows too
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never tracked"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def _rectify_target():
+    return GridMapping.regular(
+        size=(2, 2), xy_min=(-1, 51), xy_res=2, crs=CRS_WGS84
+    )
+
+
+@pytest.mark.parametrize("case", [
+    "rectify_downscale_numpy_gm", "rectify_downscale_gm_df", "affine",
+    "reproject", "reproject_time_coord",
+])
+def test_planning_launches_no_spark_job(spark, case):
+    """resample_in_space only builds the plan: no route runs a job before
+    the caller's action, the rectify pre-downscale included."""
+    from xcube_resampling_spark.gridmapping.distributed import GridMappingDF
+    from xcube_resampling_spark.operators.rectify import coords_to_df
+
+    if case.startswith("rectify"):
+        ds = create_4x4_dataset_with_irregular_coords(spark)
+        gm, target_gm = ds.grid_mapping(), _rectify_target()
+        if case == "rectify_downscale_gm_df":
+            gm = GridMappingDF.from_coords_df(coords_to_df(spark, gm), gm.crs)
+    elif case == "affine":
+        ds = create_8x6_dataset_with_regular_coords(spark)
+        gm = ds.grid_mapping()
+        target_gm = GridMapping.regular((3, 3), (50.0, 10.0), 0.1, gm.crs)
+    else:
+        ds = (create_5x5_dataset_regular_utm(spark) if case == "reproject"
+              else create_2x5x5_dataset_regular_utm(spark))
+        gm = ds.grid_mapping()
+        target_gm = GridMapping.regular(
+            (5, 5), (4320080, 3382480), 80, "epsg:3035"
+        )
+    n = _jobs_launched(spark, lambda: resample_in_space(
+        ds, target_gm=target_gm, source_gm=gm, interp_methods=1
+    ))
+    assert n == 0
+    # the counter sees the jobs of an action
+    assert _jobs_launched(spark, lambda: ds.data_vars[
+        next(iter(ds.data_vars))
+    ].df.count()) > 0
+
+
+def test_plane_count_reads_the_source_not_the_downscale(spark):
+    """A 3-D variable without a time coordinate has its planes counted
+    by a max(t) job.  That job reads the source, never a downscaled
+    frame: planning a pre-downscaled rectify costs at most the two plane
+    counts (the downscale's and the scatter's), each one source scan."""
+    from xcube_resampling_spark.dataset import SparkDataset
+    from xcube_resampling_spark.operators.utils import num_t
+
+    src = create_4x4_dataset_with_irregular_coords(spark)
+    rad = src.to_numpy("rad", (4, 4))
+    ds = SparkDataset.from_numpy(
+        spark,
+        data_vars={"rad": (("time", "y", "x"), np.stack([rad, rad + 1]))},
+        coords={"lon": src.coords["lon"], "lat": src.coords["lat"]},
+        yx_dims=("y", "x"),
+    )
+    gm = ds.grid_mapping()
+    one_count = _jobs_launched(
+        spark, lambda: num_t(ds, ds.data_vars["rad"])
+    )
+    assert one_count > 0
+    out = []
+    n = _jobs_launched(spark, lambda: out.append(resample_in_space(
+        ds, target_gm=_rectify_target(), source_gm=gm, interp_methods=1
+    )))
+    assert n <= 2 * one_count
+    got = out[0].to_numpy("rad", (2, 2, 2))
+    np.testing.assert_almost_equal(got[0], [[7.5, 4.5], [12.5, 9.5]])
+    np.testing.assert_almost_equal(got[1], got[0] + 1)

@@ -214,17 +214,6 @@ def numpy_to_pixels(spark: SparkSession, arr: np.ndarray) -> DataFrame:
     return spark.createDataFrame(pdf, schema=PIXEL_SCHEMA)
 
 
-def pixels_to_numpy(df: DataFrame, shape: tuple[int, int, int],
-                    fill_value: float = np.nan) -> np.ndarray:
-    """Collect a long-format pixel DataFrame into a dense (t,h,w) array."""
-    out = np.full(shape, fill_value, dtype=np.float64)
-    for r in df.select("t", "j", "i", "value").collect():
-        out[r["t"], r["j"], r["i"]] = (
-            np.nan if r["value"] is None else r["value"]
-        )
-    return out
-
-
 def grid_df(spark: SparkSession, width: int, height: int,
             num_t: int = 1) -> DataFrame:
     """Distributed generation of all (t, j, i) target pixel indices.

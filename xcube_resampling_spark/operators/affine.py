@@ -181,8 +181,12 @@ def resample_pixels(
     fill_value,
     is_int: bool,
 ) -> DataFrame:
-    """Long-format pixel resampling through a target->source affine matrix
-    (reference affine.py:243-313)."""
+    """Pixel resampling through a target->source affine matrix
+    (reference affine.py:243-313).
+
+    ``src_df`` holds long (t, j, i, value) rows or, already one row per
+    pixel, (j, i, val_0..val_{num_t-1}) (see :func:`pivot_t`); the result
+    is long (t, j, i, value)."""
     ((i_scale, _b, i_off), (_d, j_scale, j_off)) = affine_matrix
     # Snap near-integer matrix entries: the composition of two grid
     # transforms is mathematically exact for grid-aligned cases, and
@@ -477,6 +481,10 @@ def gather_fused(
             out = np.where(bad[None, :, :], fill, out)
 
         if window_reduce is not None:
+            # the advanced-indexing gather lays ``out`` out by num_t, and
+            # the layout fixes the float summation order: a C-order copy
+            # makes every plane's sums independent of its companions
+            out = np.ascontiguousarray(out)
             rk_j, rk_i, rmethod = window_reduce
             w_out = w // rk_i
             row_J = np.arange(j_start, j_start + rows_h) // rk_j

@@ -38,15 +38,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..constants import SCALE_LIMIT, UV_DELTA, is_int_dtype
+from ..constants import (
+    SCALE_LIMIT, UV_DELTA, default_fill_value, is_int_dtype,
+)
 from ..dataset import PIXEL_SCHEMA, SparkDataset, Variable
 from ..gridmapping import GridMapping
 from ..gridmapping.distributed import GridMappingDF
-from .affine import resample_dataset
+from .affine import resample_dataset, resample_pixels
 from .utils import (
     num_t as num_t_of,
+    get_agg_method,
     get_fill_value,
+    get_interp_method_int,
     get_interp_method_str,
+    get_recover_nan,
     is_equal_crs,
     pack_ij,
     pivot_t,
@@ -139,8 +144,10 @@ def rectify_dataset(
 
     # coordinate images become (or stay) a distributed pixel DataFrame from
     # here on: every downstream step (CRS transform, pre-downscale, scatter)
-    # operates on the cluster-resident coords -- no driver round-trips, no
-    # .collect() anywhere below (the scale path a 100-TB swath needs)
+    # operates on the cluster-resident coords -- no driver round-trips.
+    # The one collect below is the CRS-transform branch's grid inference,
+    # which needs the transformed resolution (besides num_t's max(t)
+    # fallback for a 3-D variable without a time coordinate)
     if isinstance(source_gm, GridMappingDF):
         gm_df = source_gm
     else:
@@ -179,18 +186,18 @@ def rectify_dataset(
         )
 
     source_ds = source_ds.select_variables(variables)
+    # planes are counted on the source: a num_t fallback job must never
+    # evaluate the downscale below
+    planes_ds = source_ds
 
     # pre-downscale when the source is finer than the target
     # (reference rectify.py:136-143, 234-260)
-    source_ds, gm_df = _downscale_source_dataset(
+    source_ds, src_coords, (src_w, src_h) = _downscale_source_dataset(
         source_ds, gm_df, target_gm,
         interp_methods, agg_methods, recover_nans,
     )
-    source_gm = gm_df
 
-    w, h = target_gm.size
-    src_w, src_h = source_gm.size
-    yx_dims = (source_gm.xy_dim_names[1], source_gm.xy_dim_names[0])
+    yx_dims = (gm_df.xy_dim_names[1], gm_df.xy_dim_names[0])
     # fall back to the dataset's own yx dims (coord-derived names can
     # legitimately differ from the data variables' dim names)
     ds_yx = source_ds.yx_dims
@@ -204,12 +211,12 @@ def rectify_dataset(
                 )
             interp = get_interp_method_str(interp_methods, name, var.dtype)
             fill = get_fill_value(fill_values, name, var.dtype)
-            num_t = num_t_of(source_ds, var)
+            num_t = num_t_of(planes_ds, planes_ds.data_vars[name])
             # fused two-shuffle pipeline (scatter kernel emits final
             # interpolated values; FWW + densify in the second kernel);
             # tests compare it with the SQL reference in
             # tests/reference_kernels.py
-            fused = fuse_coords_values(gm_df.coords, var.df, num_t)
+            fused = fuse_coords_values(src_coords, var.df, num_t)
             df = rectify_fused_tiled(
                 fused, target_gm, (src_w, src_h), num_t, interp, fill,
                 is_int_dtype(var.dtype), UV_DELTA,
@@ -218,12 +225,11 @@ def rectify_dataset(
         elif ds_yx[0] not in var.dims and ds_yx[1] not in var.dims:
             new_vars[name] = var
 
-    x_name, y_name = target_gm.xy_var_names
     tcoords = target_gm.to_coords()
     coords = {
         k: v
         for k, v in source_ds.coords.items()
-        if k not in source_gm.xy_var_names
+        if k not in gm_df.xy_var_names
         and k not in ("lon", "lat", "spatial_ref")
     }
     coords.update(tcoords)
@@ -824,63 +830,45 @@ def _downscale_source_dataset(
     interp_methods,
     agg_methods,
     recover_nans,
-) -> tuple[SparkDataset, GridMappingDF]:
-    """Affine-downscale data vars AND 2-D coordinate images when the source
-    is finer than the target (reference rectify.py:234-260; the reference
-    resamples the coord arrays through the same pipeline because they are
-    (y, x) variables of the dataset).  The coord images stay distributed:
-    the downscaled grid's stats (res/bbox/orientation) are re-derived by
-    aggregation, never collected."""
+) -> tuple[SparkDataset, DataFrame, tuple[int, int]]:
+    """Affine-downscale the data variables and the 2-D coordinate images
+    when the source is finer than the target (reference
+    rectify.py:234-260, which resamples the coordinate arrays as (y, x)
+    variables of the dataset).
+
+    Returns ``(dataset, coords, size)``: the (j, i, x, y) coordinates and
+    the (width, height) of the grid the scatter reads.  x and y ride one
+    ``resample_pixels`` call as two planes, with the interp / agg /
+    recover-NaN settings that ``"__x__"`` resolves to as a float64
+    variable.  No grid is re-inferred: the scatter reads no resolution or
+    bbox of the downscaled grid, so nothing here collects."""
     x_scale = gm_df.x_res / target_gm.x_res
     y_scale = gm_df.y_res / target_gm.y_res
     if not (x_scale < SCALE_LIMIT or y_scale < SCALE_LIMIT):
-        return source_ds, gm_df
+        return source_ds, gm_df.coords, gm_df.size
     w = round(x_scale * gm_df.width)
     h = round(y_scale * gm_df.height)
     downscaled_size = (w if w >= 2 else 2, h if h >= 2 else 2)
+    matrix = ((1 / x_scale, 0, 0), (0, 1 / y_scale, 0))
+    interp_methods = prep_interp_methods_downscale(interp_methods)
 
-    spark = source_ds.spark
-    yx = source_ds.yx_dims
-    t0 = F.lit(0).cast("int").alias("t")
-    combo_vars = dict(source_ds.data_vars)
-    combo_vars["__x__"] = Variable(
-        "__x__",
-        gm_df.coords.select(t0, "j", "i", F.col("x").alias("value")),
-        yx, "float64",
-    )
-    combo_vars["__y__"] = Variable(
-        "__y__",
-        gm_df.coords.select(t0, "j", "i", F.col("y").alias("value")),
-        yx, "float64",
-    )
-    combo = SparkDataset(
-        spark=spark,
-        data_vars=combo_vars,
-        coords=dict(source_ds.coords),
-        coord_attrs=dict(source_ds.coord_attrs),
-        attrs=dict(source_ds.attrs),
-        yx_dims=yx,
-    )
     out = resample_dataset(
-        combo,
-        ((1 / x_scale, 0, 0), (0, 1 / y_scale, 0)),
-        yx,
-        downscaled_size,
-        gm_df.size,
-        prep_interp_methods_downscale(interp_methods),
-        agg_methods,
-        recover_nans,
+        source_ds, matrix, source_ds.yx_dims, downscaled_size, gm_df.size,
+        interp_methods, agg_methods, recover_nans,
     )
-    new_coords = out.data_vars.pop("__x__").df.select(
-        "j", "i", F.col("value").alias("x")
-    ).join(
-        out.data_vars.pop("__y__").df.select(
-            "j", "i", F.col("value").alias("y")
+    xy = resample_pixels(
+        source_ds.spark,
+        gm_df.coords.select(
+            "j", "i", F.col("x").alias("val_0"), F.col("y").alias("val_1")
         ),
-        ["j", "i"],
+        matrix, gm_df.size, downscaled_size, 2,
+        get_interp_method_int(interp_methods, "__x__", "float64"),
+        get_agg_method(agg_methods, "__x__", "float64"),
+        get_recover_nan(recover_nans, "__x__", "float64"),
+        default_fill_value("float64"),
+        False,
     )
-    new_gm = GridMappingDF.from_coords_df(
-        new_coords, gm_df.crs, size=downscaled_size,
-        tile_size=gm_df.tile_size,
+    coords = pivot_t(xy, 2).select(
+        "j", "i", F.col("val_0").alias("x"), F.col("val_1").alias("y")
     )
-    return out, new_gm
+    return out, coords, downscaled_size

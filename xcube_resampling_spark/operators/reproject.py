@@ -158,6 +158,9 @@ def reproject_dataset(
         source_ds, source_gm = flip_j_axis(source_ds, source_gm)
 
     source_ds = source_ds.select_variables(variables)
+    # planes are counted on the source: a num_t fallback job must never
+    # evaluate the downscale below
+    planes_ds = source_ds
 
     transformer = Transformer.from_crs(target_gm.crs, source_gm.crs)
 
@@ -225,7 +228,7 @@ def reproject_dataset(
                 )
             interp = get_interp_method_str(interp_methods, name, var.dtype)
             fill = get_fill_value(fill_values, name, var.dtype)
-            num_t = num_t_of(source_ds, var)
+            num_t = num_t_of(planes_ds, planes_ds.data_vars[name])
             # cogrouped single-pass gather (equivalence-tested against the
             # join+pivot _gather_interp in tests/reference_kernels.py)
             df = gather_interp_fused(

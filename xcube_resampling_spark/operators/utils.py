@@ -18,7 +18,6 @@ from ..constants import (
     default_agg_method,
     default_fill_value,
     default_interp_method,
-    is_int_dtype,
 )
 from ..gridmapping import GridMapping
 
@@ -137,7 +136,13 @@ def pivot_t(values: DataFrame, num_t: int) -> DataFrame:
     Wide double columns, not an array column: Arrow list columns cost a
     Python object per row on the pandas side, wide columns are zero-copy
     numpy views.  A (t, j, i) row that is absent or NULL gives a NULL
-    val_t.  num_t == 1 is a pure projection -- no shuffle."""
+    val_t.  num_t == 1 is a pure projection -- no shuffle; so is a frame
+    that is already wide (j, i, val_0..val_{num_t-1}), such as rectify's
+    x/y coordinate pair."""
+    if "val_0" in values.columns:
+        return values.select(
+            "j", "i", *[f"val_{k}" for k in range(num_t)]
+        )
     if num_t == 1:
         return values.select("j", "i", F.col("value").alias("val_0"))
     return values.groupBy("j", "i").agg(
@@ -252,10 +257,6 @@ def clip_pixels_by_ij_bbox(df: DataFrame, ij_bbox) -> DataFrame:
         & (F.col("j") >= j_min)
         & (F.col("j") < j_max)
     )
-
-
-def is_float_dtype(dtype: str) -> bool:
-    return not is_int_dtype(dtype)
 
 
 def ij_bboxes_containment(
