@@ -3,6 +3,7 @@
 import logging
 import time
 import uuid
+from dataclasses import replace
 
 import numpy as np
 import pytest
@@ -210,13 +211,35 @@ def _rectify_target():
     )
 
 
+def _store_read(spark, tmp_path, ds, var, nt):
+    """``ds[var]`` written to a CF zarr store (no time coordinate) and
+    opened again: a store-read variable, whose extents come from the
+    store's ``.zarray``."""
+    from xcube_resampling_spark.sources.zarr import (
+        open_zarr_dataset,
+        write_zarr_cf,
+    )
+
+    path = str(tmp_path / "store.zarr")
+    write_zarr_cf(ds.data_vars[var].df, path, var, ds.grid_mapping(),
+                  nt=nt)
+    return open_zarr_dataset(spark, path)[0]
+
+
+_EPSG3035_5X5 = GridMapping.regular(
+    (5, 5), (4320080, 3382480), 80, "epsg:3035"
+)
+
+
 @pytest.mark.parametrize("case", [
     "rectify_downscale_numpy_gm", "rectify_downscale_gm_df", "affine",
-    "reproject", "reproject_time_coord",
+    "reproject", "reproject_time_coord", "reproject_zarr_no_time_coord",
 ])
-def test_planning_launches_no_spark_job(spark, case):
+def test_planning_launches_no_spark_job(spark, tmp_path, case):
     """resample_in_space only builds the plan: no route runs a job before
-    the caller's action, the rectify pre-downscale included."""
+    the caller's action, the rectify pre-downscale included, and a
+    store-read cube without a time coordinate counts its planes from
+    its shape."""
     from xcube_resampling_spark.gridmapping.distributed import GridMappingDF
     from xcube_resampling_spark.operators.rectify import coords_to_df
 
@@ -232,10 +255,11 @@ def test_planning_launches_no_spark_job(spark, case):
     else:
         ds = (create_5x5_dataset_regular_utm(spark) if case == "reproject"
               else create_2x5x5_dataset_regular_utm(spark))
+        if case == "reproject_zarr_no_time_coord":
+            ds = _store_read(spark, tmp_path, ds, "band_1", nt=2)
+            assert "time" not in ds.coords and "t" not in ds.coords
         gm = ds.grid_mapping()
-        target_gm = GridMapping.regular(
-            (5, 5), (4320080, 3382480), 80, "epsg:3035"
-        )
+        target_gm = _EPSG3035_5X5
     n = _jobs_launched(spark, lambda: resample_in_space(
         ds, target_gm=target_gm, source_gm=gm, interp_methods=1
     ))
@@ -247,10 +271,10 @@ def test_planning_launches_no_spark_job(spark, case):
 
 
 def test_plane_count_reads_the_source_not_the_downscale(spark):
-    """A 3-D variable without a time coordinate has its planes counted
-    by a max(t) job.  That job reads the source, never a downscaled
-    frame: planning a pre-downscaled rectify costs at most the two plane
-    counts (the downscale's and the scatter's), each one source scan."""
+    """A 3-D variable with neither a time coordinate nor a shape has its
+    planes counted by a max(t) job.  That job reads the source, never a
+    downscaled frame, and runs once per plan: the downscale's output
+    carries its shape, so the scatter reads its plane count off that."""
     from xcube_resampling_spark.dataset import SparkDataset
     from xcube_resampling_spark.operators.utils import num_t
 
@@ -262,6 +286,8 @@ def test_plane_count_reads_the_source_not_the_downscale(spark):
         coords={"lon": src.coords["lon"], "lat": src.coords["lat"]},
         yx_dims=("y", "x"),
     )
+    # a hand-built frame: no shape, so num_t falls back to max(t)
+    ds.data_vars["rad"] = replace(ds.data_vars["rad"], shape=None)
     gm = ds.grid_mapping()
     one_count = _jobs_launched(
         spark, lambda: num_t(ds, ds.data_vars["rad"])
@@ -271,7 +297,99 @@ def test_plane_count_reads_the_source_not_the_downscale(spark):
     n = _jobs_launched(spark, lambda: out.append(resample_in_space(
         ds, target_gm=_rectify_target(), source_gm=gm, interp_methods=1
     )))
-    assert n <= 2 * one_count
+    assert n <= one_count
     got = out[0].to_numpy("rad", (2, 2, 2))
     np.testing.assert_almost_equal(got[0], [[7.5, 4.5], [12.5, 9.5]])
     np.testing.assert_almost_equal(got[1], got[0] + 1)
+
+
+def test_store_read_cube_keeps_a_trailing_empty_plane(spark, tmp_path):
+    """A zarr chunk that is not stored is all fill_value; xarray reads
+    such a plane as NaN.  The plane count of a store-read cube comes
+    from its ``.zarray`` shape, so a trailing plane without chunk files
+    comes out all-fill rather than dropped, and planning runs no job."""
+    from pyspark.sql import functions as F
+
+    from xcube_resampling_spark.crs import CRS
+    from xcube_resampling_spark.sources.zarr import (
+        open_zarr_dataset,
+        write_zarr_cf,
+    )
+
+    crs = CRS.from_epsg(32632)
+    gm = GridMapping.regular((8, 8), (565000.0, 5933000.0), 100.0, crs)
+    pixels = spark.range(3 * 64).select(
+        (F.col("id") / 64).cast("int").alias("t"),
+        (F.col("id") % 64 / 8).cast("int").alias("j"),
+        (F.col("id") % 8).cast("int").alias("i"),
+        F.col("id").cast("double").alias("value"),
+    )
+    path = tmp_path / "stack.zarr"
+    write_zarr_cf(pixels, str(path), "value", gm, nt=3, chunks=(1, 4, 4))
+    empty = sorted((path / "value").glob("2.*"))
+    assert len(empty) == 4
+    for p in empty:
+        p.unlink()
+    ds, gm = open_zarr_dataset(spark, str(path))
+    target_gm = GridMapping.regular((4, 4), (565000.0, 5933000.0), 200.0,
+                                    crs)
+    out = []
+    n = _jobs_launched(spark, lambda: out.append(resample_in_space(
+        ds, target_gm, source_gm=gm, interp_methods=0
+    )))
+    assert n == 0
+    var = out[0].data_vars["value"]
+    assert var.shape == (3, 4, 4)
+    got = out[0].to_numpy("value", var.shape)
+    assert var.df.count() == 48
+    assert np.isfinite(got[:2]).all()
+    assert np.isnan(got[2]).all()
+
+
+def _dense_shape(var):
+    """The shape of the dense array a variable's frame holds, in dims
+    order; the frame must hold every pixel of it exactly once."""
+    from pyspark.sql import functions as F
+
+    row = var.df.agg(
+        F.count("*").alias("n"), F.max("t").alias("t"),
+        F.max("j").alias("j"), F.max("i").alias("i"),
+    ).collect()[0]
+    shape = (row.t + 1, row.j + 1, row.i + 1)
+    assert row.n == np.prod(shape)
+    return shape if len(var.dims) == 3 else shape[1:]
+
+
+@pytest.mark.parametrize("route", [
+    "affine", "reproject", "reproject_store_read", "rectify",
+    "resample_in_time",
+])
+def test_output_shape_is_the_dense_shape(spark, tmp_path, route):
+    """Every operator that changes an extent sets its output's shape."""
+    from xcube_resampling_spark.operators.temporal import resample_in_time
+
+    from .sampledata import create_2x8x6_dataset_with_regular_coords
+
+    if route == "affine":
+        ds = create_2x8x6_dataset_with_regular_coords(spark)
+        out = resample_in_space(ds, GridMapping.regular(
+            (3, 3), (50.0, 10.0), 0.1, ds.grid_mapping().crs
+        ), interp_methods=1)
+        name, want = "refl", (2, 3, 3)
+    elif route.startswith("reproject"):
+        ds = create_2x5x5_dataset_regular_utm(spark)
+        if route == "reproject_store_read":
+            ds = _store_read(spark, tmp_path, ds, "band_1", nt=2)
+        out = resample_in_space(ds, _EPSG3035_5X5, interp_methods=1)
+        name, want = "band_1", (2, 5, 5)
+    elif route == "rectify":
+        ds = create_4x4_dataset_with_irregular_coords(spark)
+        out = resample_in_space(ds, _rectify_target(), interp_methods=1)
+        name, want = "rad", (2, 2)
+    else:
+        ds = create_2x8x6_dataset_with_regular_coords(spark)
+        out = resample_in_time(ds, period=10)  # both days, one bin
+        name, want = "refl", (1, 6, 8)
+    var = out.data_vars[name]
+    assert var.shape == want
+    assert _dense_shape(var) == want

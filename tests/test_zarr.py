@@ -1,5 +1,6 @@
-"""Zarr v2 source/sink: distributed chunk write, pruned binaryFile read,
-edge-chunk padding, zlib + raw codecs, interop with a hand-written store."""
+"""Zarr v2 source/sink: distributed chunk write, chunk-pruned read by
+key, edge-chunk padding, zlib + raw codecs, interop with a hand-written
+store, and the open/read paths launching no Spark job."""
 
 import json
 import os
@@ -55,21 +56,23 @@ class TestZarrRoundtrip:
         )
 
     def test_bbox_prunes_chunk_files(self, spark, tmp_path):
-        """The window read lists only intersecting chunk files into the
-        binaryFile scan (chunk pruning ~ partition pruning)."""
+        """The window read fetches only the chunks intersecting the
+        window (chunk pruning ~ partition pruning): the 12 chunks outside
+        it hold garbage bytes, which zlib would refuse to decode."""
         w, h = 32, 32
         df = _raster(spark, w, h)
         path = str(tmp_path / "store_bbox")
         write_zarr(df, path, "v", (h, w), (8, 8))
-        out = read_zarr(spark, path, "v", bbox_ij=(4, 4, 12, 12))
-        # files in the plan: only the 4 chunks covering j,i in [4,12)
-        files = [
-            r["file"]
-            for r in out.select(
-                F.input_file_name().alias("file")
-            ).distinct().collect()
+        # only the 4 chunks covering j,i in [4,12) stay readable
+        outside = [
+            f"{kj}.{ki}" for kj in range(4) for ki in range(4)
+            if kj > 1 or ki > 1
         ]
-        assert len(files) == 4
+        assert len(outside) == 12
+        for key in outside:
+            with open(os.path.join(path, "v", key), "wb") as fp:
+                fp.write(b"not a zlib stream")
+        out = read_zarr(spark, path, "v", bbox_ij=(4, 4, 12, 12))
         pdf = out.toPandas()
         assert len(pdf) == 64
         assert pdf["i"].between(4, 11).all()
@@ -388,6 +391,32 @@ class TestCfStore:
         return GridMapping.regular(
             (16, 12), (500000.0, 5000000.0), 100.0, CRS.from_epsg(32632)
         )
+
+    def test_open_launches_no_spark_job(self, spark, tmp_path):
+        """open_zarr_dataset fetches chunks by key: a store with more
+        chunk files than Spark's parallel-listing threshold (32) opens
+        without a file-listing job, and its variable carries the
+        store's shape."""
+        from xcube_resampling_spark.sources import (
+            open_zarr_dataset,
+            write_zarr_cf,
+        )
+
+        from .test_spatial import _jobs_launched
+
+        path = str(tmp_path / "cfstore")
+        write_zarr_cf(_raster(spark, 16, 12, nt=3), path, "band",
+                      self._gm(), nt=3, chunks=(1, 4, 4))
+        chunk_files = [n for n in os.listdir(os.path.join(path, "band"))
+                       if not n.startswith(".")]
+        assert len(chunk_files) == 36
+        opened = []
+        n = _jobs_launched(
+            spark, lambda: opened.append(open_zarr_dataset(spark, path)))
+        assert n == 0
+        var = opened[0][0].data_vars["band"]
+        assert var.shape == (3, 12, 16)
+        assert var.df.count() == 3 * 12 * 16
 
     def test_store_layout_is_xarray_convention(self, spark, tmp_path):
         from xcube_resampling_spark.sources import write_zarr_cf

@@ -56,6 +56,8 @@ class Variable:
     # declared storage chunk size per dim (max chunk size, like the max of
     # an xarray/dask var.chunks tuple); None = not chunked
     chunks: tuple[int, ...] | None = None
+    # extent per dim, in dims order (xarray's var.shape); None = unknown
+    shape: tuple[int, ...] | None = None
 
     @property
     def is_spatial(self) -> bool:
@@ -108,12 +110,13 @@ class SparkDataset:
                 df = numpy_to_pixels(spark, arr)
                 variables[name] = Variable(
                     name, df, dims, str(arr.dtype),
-                    dict(var_attrs.get(name, {})),
+                    dict(var_attrs.get(name, {})), shape=arr.shape,
                 )
             else:
                 variables[name] = Variable(
                     name, None, dims, str(arr.dtype),
                     dict(var_attrs.get(name, {})), data=arr,
+                    shape=arr.shape,
                 )
         return SparkDataset(
             spark=spark,

@@ -34,6 +34,7 @@ The equi-join formulation of the same gather, ``_gather``, lives in
 from __future__ import annotations
 
 import math
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,6 +52,7 @@ from .utils import (
     get_recover_nan,
     pack_ij,
     pivot_t,
+    resampled_shape,
     source_plane,
 )
 
@@ -137,7 +139,10 @@ def resample_dataset(
                 get_fill_value(fill_values, name, var.dtype),
                 is_int_dtype(var.dtype),
             )
-            new_vars[name] = var.with_df(df)
+            new_vars[name] = replace(
+                var, df=df,
+                shape=resampled_shape(var, num_t, target_size),
+            )
         elif yx_dims[0] not in var.dims and yx_dims[1] not in var.dims:
             new_vars[name] = var
     # carry non-spatial coords (e.g. time axis); drop spatial axes and any

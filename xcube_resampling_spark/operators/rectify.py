@@ -33,6 +33,8 @@ equivalence reference.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,6 +58,7 @@ from .utils import (
     pack_ij,
     pivot_t,
     prep_interp_methods_downscale,
+    resampled_shape,
     unpack_ij,
 )
 
@@ -186,9 +189,6 @@ def rectify_dataset(
         )
 
     source_ds = source_ds.select_variables(variables)
-    # planes are counted on the source: a num_t fallback job must never
-    # evaluate the downscale below
-    planes_ds = source_ds
 
     # pre-downscale when the source is finer than the target
     # (reference rectify.py:136-143, 234-260)
@@ -211,7 +211,9 @@ def rectify_dataset(
                 )
             interp = get_interp_method_str(interp_methods, name, var.dtype)
             fill = get_fill_value(fill_values, name, var.dtype)
-            num_t = num_t_of(planes_ds, planes_ds.data_vars[name])
+            # the downscale's outputs carry their shape: planes are
+            # counted once, on the source, by the downscale
+            num_t = num_t_of(source_ds, var)
             # fused two-shuffle pipeline (scatter kernel emits final
             # interpolated values; FWW + densify in the second kernel);
             # tests compare it with the SQL reference in
@@ -221,7 +223,10 @@ def rectify_dataset(
                 fused, target_gm, (src_w, src_h), num_t, interp, fill,
                 is_int_dtype(var.dtype), UV_DELTA,
             )
-            new_vars[name] = var.with_df(df)
+            new_vars[name] = replace(
+                var, df=df,
+                shape=resampled_shape(var, num_t, target_gm.size),
+            )
         elif ds_yx[0] not in var.dims and ds_yx[1] not in var.dims:
             new_vars[name] = var
 

@@ -26,6 +26,8 @@ The equi-join formulation of the gather, ``_gather_interp``, lives in
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -44,6 +46,7 @@ from .utils import (
     pack_ij,
     pivot_t,
     prep_interp_methods_downscale,
+    resampled_shape,
     source_plane,
     unpack_ij,
 )
@@ -158,9 +161,6 @@ def reproject_dataset(
         source_ds, source_gm = flip_j_axis(source_ds, source_gm)
 
     source_ds = source_ds.select_variables(variables)
-    # planes are counted on the source: a num_t fallback job must never
-    # evaluate the downscale below
-    planes_ds = source_ds
 
     transformer = Transformer.from_crs(target_gm.crs, source_gm.crs)
 
@@ -228,14 +228,19 @@ def reproject_dataset(
                 )
             interp = get_interp_method_str(interp_methods, name, var.dtype)
             fill = get_fill_value(fill_values, name, var.dtype)
-            num_t = num_t_of(planes_ds, planes_ds.data_vars[name])
+            # the downscale's outputs carry their shape: planes are
+            # counted once, on the source, by the downscale
+            num_t = num_t_of(source_ds, var)
             # cogrouped single-pass gather (equivalence-tested against the
             # join+pivot _gather_interp in tests/reference_kernels.py)
             df = gather_interp_fused(
                 grid2d, var.df, spark, (src_w, src_h), num_t, interp,
                 fill, is_int_dtype(var.dtype),
             )
-            new_vars[name] = var.with_df(df)
+            new_vars[name] = replace(
+                var, df=df,
+                shape=resampled_shape(var, num_t, target_gm.size),
+            )
         elif yx_dims[0] not in var.dims and yx_dims[1] not in var.dims:
             new_vars[name] = var
 
@@ -336,6 +341,7 @@ def clip_dataset_by_bbox(
         return ds, gm
     i_min, i_max = (int(xi[0]), int(xi[-1])) if xi.size else (0, -1)
     j_min, j_max = (int(yi[0]), int(yi[-1])) if yi.size else (0, -1)
+    hw = (j_max - j_min + 1, i_max - i_min + 1)
     new_vars = {}
     for name, var in ds.data_vars.items():
         if var.is_spatial:
@@ -348,7 +354,11 @@ def clip_dataset_by_bbox(
                 (F.col("i") - i_min).cast("int").alias("i"),
                 "value",
             )
-            new_vars[name] = var.with_df(df)
+            new_vars[name] = replace(
+                var, df=df,
+                shape=None if var.shape is None
+                else (*var.shape[:-2], *hw),
+            )
         else:
             new_vars[name] = var
     x_name, y_name = gm.xy_var_names

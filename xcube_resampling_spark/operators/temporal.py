@@ -728,7 +728,8 @@ def resample_in_time(
                     out_data[out_idx[t_out]] += (
                         wgt * data[pos[t_src]].astype("float64"))
             new_vars[name] = _replace(
-                var, data=out_data, dtype="float64")
+                var, data=out_data, dtype="float64",
+                shape=out_data.shape)
             continue
         if len(var.dims) != 3 or var.dims[0] != time_dim:
             raise NotImplementedError(
@@ -749,6 +750,8 @@ def resample_in_time(
         new_vars[name] = _replace(
             var, df=out.select("t", "j", "i", "value"),
             dtype="float64",
+            shape=None if var.shape is None
+            else (len(out_labels), *var.shape[1:]),
         )
 
     new_coords = dict(source_ds.coords)

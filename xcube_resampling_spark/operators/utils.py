@@ -108,25 +108,36 @@ def get_fill_value(fill_values, var_name: str, dtype: str):
 def num_t(dataset, var) -> int:
     """Extent of a 3-D variable's leading (time) dimension.
 
-    Prefers the coordinate length; when the leading dim has no coordinate
-    entry the extent is derived from the data itself (max t + 1) -- the
-    reference derives it from the array shape (xarray always knows it), so
-    silently assuming 1 would drop every t > 0 plane.
+    Read, in order, from the coordinate length, the variable's
+    ``shape[0]`` (every reader and operator sets it -- the reference
+    takes every extent from the array shape, which xarray always
+    knows), and, for a hand-built frame without a shape, the data
+    itself (max t + 1, one Spark job); silently assuming 1 would drop
+    every t > 0 plane.
 
-    KNOWN LIMIT of the data-derived fallback: a TRAILING plane with no
-    coverage at all (every pixel absent in the long format) is
-    indistinguishable from a shorter axis, so it is dropped rather than
-    emitted all-fill.  Attach a coordinate for the leading dim (any
-    values; only its length is read) when trailing empty planes must
-    survive.
+    KNOWN LIMIT of the data-derived fallback, so of hand-built frames
+    only: a TRAILING plane with no coverage at all (every pixel absent
+    in the long format) is indistinguishable from a shorter axis, so
+    it is dropped rather than emitted all-fill.  Give such a variable
+    its ``shape``, or a coordinate for the leading dim (any values;
+    only its length is read), when trailing empty planes must survive.
     """
     if len(var.dims) < 3:
         return 1
     t_coord = dataset.coords.get(var.dims[0])
     if t_coord is not None:
         return len(t_coord)
+    if var.shape is not None:
+        return int(var.shape[0])
     row = var.df.agg(F.max("t").alias("mt")).collect()[0]
     return int(row.mt) + 1 if row.mt is not None else 1
+
+
+def resampled_shape(var, num_t: int, size: tuple[int, int]):
+    """``var.shape`` after resampling onto a (w, h) grid ``size`` with
+    ``num_t`` planes: ``(h, w)`` or ``(num_t, h, w)`` in dims order."""
+    w, h = size
+    return (h, w) if len(var.dims) < 3 else (num_t, h, w)
 
 
 def pivot_t(values: DataFrame, num_t: int) -> DataFrame:

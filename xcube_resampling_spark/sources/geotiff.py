@@ -976,7 +976,9 @@ def open_geotiff_dataset(
                                    _meta=meta)
     df = read_geotiff(spark, path, bbox_ij=bbox_ij, overview=overview,
                       decode_cf=decode_cf, _meta=meta)
-    var = Variable(var_name, df, ("t", "y", "x"), "float64", {})
+    ifd = meta[0][overview]
+    var = Variable(var_name, df, ("t", "y", "x"), "float64", {},
+                   shape=(ifd.spp, ifd.height, ifd.width))
     ds = SparkDataset(
         spark=spark,
         data_vars={var_name: var},

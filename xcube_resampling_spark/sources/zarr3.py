@@ -884,7 +884,8 @@ def open_zarr3_dataset(
                  (meta.get("attributes") or {}).items()}
         df = read_zarr3(spark, path, var, bbox_ij=bbox_ij,
                         decode_cf=decode_cf)
-        data_vars[var] = Variable(var, df, dims, "float64", attrs)
+        data_vars[var] = Variable(var, df, dims, "float64", attrs,
+                                  shape=tuple(int(n) for n in meta["shape"]))
     coords = {"x": np.asarray(gm.x_coords, dtype="float64"),
               "y": np.asarray(gm.y_coords, dtype="float64")}
     coord_attrs = {"spatial_ref": gm.crs.to_cf()}
