@@ -320,7 +320,7 @@ SELECT t, J AS j, I AS i, ROUND(value, 6) AS value FROM ranked WHERE rn = 1
 
 
 def q_clip_bbox(spark, sf_dir):
-    from xcube_resampling_spark.operators.utils import clip_pixels_by_ij_bbox
+    from xcube_resampling_spark.sources.zarr import clip_pixels_by_ij_bbox
 
     r = _raster(spark, sf_dir)
     out = clip_pixels_by_ij_bbox(r, (5, 10, 20, 30))
@@ -4327,8 +4327,9 @@ def q_zarr_roundtrip(spark, sf_dir):
     chunk-store bindings (SURVEY 2.2 #5; reference opens Zarr via
     zarr.open, cfconv.py:343-358 -- its real stores live on S3):
 
-    * ``fs``: local directory store; chunk-pruned binaryFile read,
-      decode in mapInPandas.
+    * ``fs``: local directory store; the driver prunes the chunk keys,
+      executors fetch them by key (``spark.range`` tasks, no file
+      listing) and decode in mapInPandas.
     * ``kv``: the generic object-store adapter (FlatKVChunkPut): write
       AND read go through the flat put/get contract an S3 client
       satisfies -- opaque keys, no directory hierarchy, distributed
@@ -4586,7 +4587,8 @@ def q_netcdf_roundtrip(spark, sf_dir):
     variable-length string dataset through the global heap).  Each
     raster format:
     distributed row-band granule write through the ChunkPut seam,
-    band-pruned binaryFile read, struct/numpy decode in mapInPandas.
+    band-pruned granule listing on the driver, granules fetched by key
+    and struct/numpy-decoded in mapInPandas.
     Same window as zarr_roundtrip, so both twins share SQL_CLIP."""
     import tempfile
 

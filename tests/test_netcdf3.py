@@ -406,3 +406,23 @@ class TestWideBandIndex:
         ).toPandas()
         assert sorted(got["j"].unique()) == [j0, j0 + 1]
         assert (got["value"] == 123456.0).all()
+
+
+class TestBandPruneKeepsOtherFiles:
+    def test_unknown_granule_name_is_kept(self, spark, tmp_path):
+        """A bbox read of a granule directory holding a .nc file not
+        named part-<band>.nc keeps that file (its band is unknown)
+        instead of crashing on the band parse."""
+        import shutil
+
+        w, h = 4, 8
+        path = tmp_path / "ncx"
+        write_netcdf3(_raster(spark, w, h), str(path), "v", (h, w),
+                      band_rows=2)
+        shutil.copy(path / "part-00000.nc", path / "extra.nc")
+        pdf = read_netcdf3(spark, str(path), "v",
+                           bbox_ij=(0, 0, 4, 2)).toPandas()
+        # band 0 and its copy: every window pixel twice
+        assert len(pdf) == 2 * 2 * w
+        assert (pdf.groupby(["j", "i"]).size() == 2).all()
+        assert pdf["j"].max() < 2

@@ -121,6 +121,47 @@ class TestZarr3Interop:
             cf["value"].to_numpy(), exp, equal_nan=True
         )
 
+    @pytest.mark.parametrize("sep", ["/", "."])
+    def test_v2_chunk_key_encoding_separators(self, spark, tmp_path,
+                                              sep):
+        """A hand-written 3-D store under the ``v2`` chunk key encoding
+        reads back whole and windowed: separator '/' nests the chunk
+        keys as directories (``0/1/2``), '.' keeps them in one name
+        (``0.1.2``)."""
+        path = tmp_path / "v2keys"
+        adir = path / "v"
+        adir.mkdir(parents=True)
+        data = np.arange(2 * 5 * 6, dtype="<f8").reshape(2, 5, 6)
+        (adir / "zarr.json").write_text(json.dumps({
+            "zarr_format": 3, "node_type": "array",
+            "shape": [2, 5, 6], "data_type": "float64",
+            "chunk_grid": {"name": "regular",
+                           "configuration": {"chunk_shape": [1, 3, 4]}},
+            "chunk_key_encoding": {"name": "v2",
+                                   "configuration": {"separator": sep}},
+            "fill_value": "NaN",
+            "codecs": [{"name": "bytes",
+                        "configuration": {"endian": "little"}}],
+        }))
+        for kt in range(2):
+            for kj in range(2):
+                for ki in range(2):
+                    block = np.full((1, 3, 4), np.nan)
+                    sub = data[kt:kt + 1, 3 * kj:3 * kj + 3,
+                               4 * ki:4 * ki + 4]
+                    block[:, :sub.shape[1], :sub.shape[2]] = sub
+                    key = adir / sep.join(map(str, (kt, kj, ki)))
+                    key.parent.mkdir(parents=True, exist_ok=True)
+                    key.write_bytes(block.tobytes())
+        got = read_zarr3(spark, str(path), "v").toPandas().sort_values(
+            ["t", "j", "i"])
+        np.testing.assert_array_equal(got["value"].to_numpy(),
+                                      data.ravel())
+        win = read_zarr3(spark, str(path), "v", bbox_ij=(4, 3, 6, 5)) \
+            .toPandas().sort_values(["t", "j", "i"])
+        np.testing.assert_array_equal(win["value"].to_numpy(),
+                                      data[:, 3:5, 4:6].ravel())
+
     def test_unsupported_codecs_rejected_clearly(self, spark, tmp_path):
         path = tmp_path / "bad"
         adir = path / "v"
@@ -427,17 +468,6 @@ class TestReviewRegressions:
             _fill_from_json("0x00", np.dtype("float64"))
         with pytest.raises(NotImplementedError):
             _fill_from_json("bogus", np.dtype("float64"))
-
-    def test_v2_key_encoding_slash_separator(self, tmp_path):
-        from xcube_resampling_spark.sources.zarr3 import _indices_from_path
-
-        enc = {"name": "v2", "configuration": {"separator": "/"}}
-        adir = str(tmp_path / "store" / "v")
-        assert _indices_from_path(
-            adir + "/0/1/2", adir, enc, 3) == (0, 1, 2)
-        enc_dot = {"name": "v2", "configuration": {"separator": "."}}
-        assert _indices_from_path(
-            adir + "/0.1.2", adir, enc_dot, 3) == (0, 1, 2)
 
     def test_shard_index_codec_guard_and_endian(self):
         import numpy as np

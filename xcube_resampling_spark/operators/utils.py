@@ -258,18 +258,6 @@ def is_equal_crs(source_gm: GridMapping, target_gm: GridMapping) -> bool:
     )
 
 
-def clip_pixels_by_ij_bbox(df: DataFrame, ij_bbox) -> DataFrame:
-    """Range predicate on pixel indices; Catalyst pushes it into the scan
-    (parity with reference utils.py:77-124 coordinate clipping)."""
-    i_min, j_min, i_max, j_max = ij_bbox
-    return df.filter(
-        (F.col("i") >= i_min)
-        & (F.col("i") < i_max)
-        & (F.col("j") >= j_min)
-        & (F.col("j") < j_max)
-    )
-
-
 def ij_bboxes_containment(
     coords_df, bboxes_df, xy_border: float = 0.0, ij_border: int = 0,
     size: tuple[int, int] | None = None,

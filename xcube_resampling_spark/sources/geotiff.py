@@ -51,7 +51,6 @@ from __future__ import annotations
 import os
 import struct
 import zlib
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -61,7 +60,11 @@ from pyspark.sql import functions as F
 from xcube_resampling_spark.sources.zarr import (
     ChunkPut,
     FsChunkPut,
-    ZARR_PIXEL_SCHEMA,
+    block_pixels,
+    cf_decode,
+    clip_pixels_by_ij_bbox,
+    fetch_chunks,
+    window_chunk_ranges,
 )
 
 __all__ = [
@@ -663,7 +666,10 @@ def read_geotiff_meta(
     path: str | RangeReader,
 ) -> tuple[list[TiffIFD], RangeReader]:
     """Parse the full IFD chain (main image + overview levels)."""
-    rr = path if isinstance(path, RangeReader) else FileRangeReader(path)
+    # a file path is made absolute here, on the driver: executors
+    # range-read the tiles, and their cwd need not match the driver's
+    rr = (path if isinstance(path, RangeReader)
+          else FileRangeReader(os.path.abspath(path)))
     bo, big, off = _parse_header(rr)
     ifds: list[TiffIFD] = []
     seen = set()
@@ -827,10 +833,11 @@ def read_geotiff(
     COG read path: the driver touches only the header + IFD chain (for
     an actual COG these lead the file -- two small ranged GETs), prunes
     the tile table against ``bbox_ij`` (half-open (i0, j0, i1, j1))
-    with pure arithmetic, and ships the surviving (band, tile, offset,
-    nbytes) quadruples to executors, each of which range-reads and
-    decodes only its own tiles.  Sparse tiles (offset 0, the GDAL
-    sparse-file convention) decode as all-nodata without any read.
+    with pure arithmetic, and hands the surviving (band, tile, offset,
+    nbytes) quadruples to the shared keyed fetch (``zarr.fetch_chunks``:
+    no exchange); each executor range-reads and decodes only its own
+    tiles.  Sparse tiles (offset 0, the GDAL sparse-file convention)
+    decode as all-nodata without any read.
 
     ``decode_cf=True`` maps the GDAL_NODATA value to NaN (the rioxarray
     ``masked=True`` behavior); raw sample values come back otherwise.
@@ -846,39 +853,16 @@ def read_geotiff(
         if not 0 <= b < spp:
             raise ValueError(f"band {b} out of range (spp={spp})")
 
-    na, nd = ifd.tiles_across, ifd.tiles_down
-    if bbox_ij is not None:
-        i0, j0, i1, j1 = bbox_ij
-        ki_r = range(max(0, i0 // ifd.tile_w),
-                     min(na, -(-i1 // ifd.tile_w)))
-        kj_r = range(max(0, j0 // ifd.tile_h),
-                     min(nd, -(-j1 // ifd.tile_h)))
-    else:
-        ki_r, kj_r = range(na), range(nd)
-
+    kj_r, ki_r = window_chunk_ranges(
+        bbox_ij, ifd.height, ifd.width, ifd.tile_h, ifd.tile_w)
+    # chunky (planar 1): one stored tile holds ALL samples interleaved
+    tile_bands = [-1] if ifd.planar == 1 else use_bands
     tasks = []
-    if ifd.planar == 1:
-        # chunky: one stored tile holds ALL samples interleaved
+    for b in tile_bands:
         for kj in kj_r:
             for ki in ki_r:
-                ix = ifd.tile_index(0, kj, ki)
-                tasks.append((-1, kj, ki, ifd.offsets[ix],
-                              ifd.counts[ix]))
-    else:
-        for b in use_bands:
-            for kj in kj_r:
-                for ki in ki_r:
-                    ix = ifd.tile_index(b, kj, ki)
-                    tasks.append((b, kj, ki, ifd.offsets[ix],
-                                  ifd.counts[ix]))
-    if not tasks:
-        return spark.createDataFrame([], schema=ZARR_PIXEL_SCHEMA)
-
-    n_part = max(1, min(len(tasks),
-                        spark.sparkContext.defaultParallelism))
-    tasks_df = spark.createDataFrame(
-        tasks, "band int, kj int, ki int, off bigint, nbytes bigint"
-    ).repartition(n_part)
+                ix = ifd.tile_index(b, kj, ki)
+                tasks.append((b, kj, ki, ifd.offsets[ix], ifd.counts[ix]))
 
     height, width = ifd.height, ifd.width
     tw, th = ifd.tile_w, ifd.tile_h
@@ -890,71 +874,40 @@ def read_geotiff(
     # fall back to the full-resolution IFD's value
     nodata = ifd.nodata if ifd.nodata is not None else ifds[0].nodata
     planar = ifd.planar
-    band_set = use_bands
-
     tiled = ifd.tiled
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for band, kj, ki, off, nbytes in zip(
-                pdf["band"], pdf["kj"], pdf["ki"], pdf["off"],
-                pdf["nbytes"],
-            ):
-                kj, ki = int(kj), int(ki)
-                vj = min(th, height - kj * th)
-                vi = min(tw, width - ki * tw)
-                if int(off) == 0 and int(nbytes) == 0:
-                    # GDAL sparse tile: implicit nodata fill
-                    fill = nodata if nodata is not None else (
-                        float("nan") if dt.kind == "f" else 0.0)
-                    planes = {
-                        b: np.full((vj, vi), fill, dtype="f8")
-                        for b in (band_set if planar == 1
-                                  else [int(band)])
-                    }
-                else:
-                    raw = rr.read(int(off), int(nbytes))
-                    # tiles are padded to (th, tw); the LAST STRIP is
-                    # not (TIFF 6.0: a strip holds only its real rows)
-                    eff_th = th if tiled else vj
-                    cube = _decode_tile_bytes(
-                        raw, comp, pred, dt, eff_th, tw,
-                        spp if planar == 1 else 1, endian,
-                        jpeg_tables=jtab,
-                    )
-                    if planar == 1:
-                        planes = {
-                            b: cube[b, :vj, :vi].astype("f8")
-                            for b in band_set
-                        }
-                    else:
-                        planes = {
-                            int(band): cube[0, :vj, :vi].astype("f8")
-                        }
-                jj, ii = np.meshgrid(
-                    np.arange(vj), np.arange(vi), indexing="ij")
-                for b, plane in planes.items():
-                    if decode_cf and nodata is not None:
-                        plane = np.where(
-                            plane == nodata, np.nan, plane)
-                    outs.append(pd.DataFrame({
-                        "t": np.full(plane.size, b, dtype=np.int32),
-                        "j": (jj.ravel() + kj * th).astype(np.int32),
-                        "i": (ii.ravel() + ki * tw).astype(np.int32),
-                        "value": plane.ravel(),
-                    }))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    df = tasks_df.mapInPandas(fetch, ZARR_PIXEL_SCHEMA)
-    if bbox_ij is not None:
-        i0, j0, i1, j1 = bbox_ij
-        df = df.filter(
-            (F.col("i") >= i0) & (F.col("i") < i1)
-            & (F.col("j") >= j0) & (F.col("j") < j1)
+    def fetch_one(task) -> pd.DataFrame:
+        band, kj, ki, off, nbytes = task
+        vj = min(th, height - kj * th)
+        vi = min(tw, width - ki * tw)
+        bands_out = use_bands if planar == 1 else [band]
+        if off == 0 and nbytes == 0:
+            # GDAL sparse tile: implicit nodata fill
+            fill = nodata if nodata is not None else (
+                float("nan") if dt.kind == "f" else 0.0)
+            cube = np.full((len(bands_out), vj, vi), fill, dtype="f8")
+        else:
+            raw = rr.read(off, nbytes)
+            # tiles are padded to (th, tw); the LAST STRIP is not
+            # (TIFF 6.0: a strip holds only its real rows)
+            eff_th = th if tiled else vj
+            cube = _decode_tile_bytes(
+                raw, comp, pred, dt, eff_th, tw,
+                spp if planar == 1 else 1, endian,
+                jpeg_tables=jtab,
+            )
+            cube = cube[bands_out if planar == 1 else [0], :vj, :vi]
+            cube = cube.astype("f8")
+        if decode_cf and nodata is not None:
+            cube = cf_decode(cube, {"_FillValue": nodata})
+        return pd.concat(
+            [block_pixels(plane[np.newaxis], b, kj * th, ki * tw)
+             for b, plane in zip(bands_out, cube)],
+            ignore_index=True,
         )
-    return df
+
+    df = fetch_chunks(spark, tasks, fetch_one)
+    return df if bbox_ij is None else clip_pixels_by_ij_bbox(df, bbox_ij)
 
 
 def open_geotiff_dataset(

@@ -48,21 +48,20 @@ Out of scope (raise ``NotImplementedError`` with a clear message):
 scaleoffset filter, filtered/chunked vlen datasets, vlen members
 inside compounds, filtered fractal heaps.
 
-Spark plumbing mirrors ``sources/netcdf3.py``: a granule directory of
+Spark plumbing is ``sources/netcdf3.py``'s: a granule directory of
 ``part-<band>.h5`` files written by one ``applyInPandas`` task each
-(through the pluggable ``ChunkPut``), band-pruned ``binaryFile`` reads
-decoded in ``mapInPandas``; compound tables get their own distributed
-pair (:func:`write_hdf5_table` / :func:`read_hdf5_table`).
+(through the pluggable ``ChunkPut``), read by the shared granule
+reader (``netcdf3.read_granules``: driver-side band-pruned listing,
+executors fetch each granule by key and decode it in ``mapInPandas``);
+compound tables get their own distributed pair
+(:func:`write_hdf5_table` / :func:`read_hdf5_table`).
 """
 
 from __future__ import annotations
 
 import json
-import os
-import re
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -70,13 +69,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xcube_resampling_spark.sources.netcdf3 import (
+    list_granules,
+    read_granules,
+)
 from xcube_resampling_spark.sources.zarr import (
     ChunkPut,
     FsChunkPut,
-    ZARR_PIXEL_SCHEMA,
+    fetch_chunks,
 )
 
 _SIG = b"\x89HDF\r\n\x1a\n"
+# NetCDF-4 granules are conventionally named .nc/.nc4
+_GRANULE_SUFFIXES = (".h5", ".nc", ".nc4")
 _UNDEF = 0xFFFFFFFFFFFFFFFF
 
 
@@ -1936,100 +1941,14 @@ def read_hdf5(
 ) -> DataFrame:
     """Read an .h5 file or granule directory as (t, j, i, value) rows.
 
-    Same contract as ``read_netcdf3``: granule directories with a
-    ``_meta.json`` manifest get driver-side band pruning under
-    ``bbox_ij``; ``decode_cf`` applies _FillValue/missing_value -> NaN
+    Same contract and the same granule reader as ``read_netcdf3``
+    (``netcdf3.read_granules``): the driver lists the ``.h5`` /
+    ``.nc`` / ``.nc4`` granules, band-pruned under ``bbox_ij`` when a
+    ``_meta.json`` manifest is present, and executors fetch and decode
+    them by key; ``decode_cf`` applies _FillValue/missing_value -> NaN
     then scale_factor/add_offset from the dataset's attributes."""
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f) for f in os.listdir(path)
-            # NetCDF-4 granules are conventionally named .nc/.nc4
-            if f.endswith((".h5", ".nc", ".nc4"))
-        )
-        meta_path = os.path.join(path, "_meta.json")
-        if bbox_ij is not None and os.path.exists(meta_path):
-            meta = json.load(open(meta_path))
-            if meta.get("var") == var_name:
-                br = int(meta["band_rows"])
-                _, j0, _, j1 = bbox_ij
-                keep = range(max(0, j0 // br), -(-j1 // br))
-                # non-part files (unknown band) are kept, not crashed on
-                matches = {
-                    f: re.search(
-                        r"part-(\d+)\.(?:h5|nc4?)$", os.path.basename(f)
-                    )
-                    for f in files
-                }
-                files = [
-                    f for f, m in matches.items()
-                    if m is None or int(m.group(1)) in keep
-                ]
-    else:
-        files = [path]
-    if not files:
-        return spark.createDataFrame([], schema=ZARR_PIXEL_SCHEMA)
-    binf = spark.read.format("binaryFile").load(files)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for content in pdf["content"]:
-                parsed = decode_hdf5(bytes(content))
-                var = parsed["vars"].get(var_name)
-                if var is None:
-                    continue
-                data = var["data"]
-                if data.ndim == 2:
-                    data = data[np.newaxis]
-                elif data.ndim != 3:
-                    raise ValueError(
-                        f"variable {var_name} must be 2-D or 3-D"
-                    )
-                data = data.astype(np.float64)
-                if decode_cf:
-                    va = var["attrs"]
-                    fill = va.get("_FillValue", va.get("missing_value"))
-                    if fill is not None:
-                        if isinstance(fill, (list, tuple)):
-                            fills = [float(f) for f in fill]
-                        else:
-                            fills = [float(fill)]
-                        data = np.where(
-                            np.isin(data, fills), np.nan, data
-                        )
-                    data = (
-                        data * float(va.get("scale_factor", 1.0))
-                        + float(va.get("add_offset", 0.0))
-                    )
-                nt, rows, w = data.shape
-                j_off = int(parsed["attrs"].get("j_offset", 0))
-                i_off = int(parsed["attrs"].get("i_offset", 0))
-                t_off = int(parsed["attrs"].get("t_offset", 0))
-                tt, jj, ii = np.meshgrid(
-                    np.arange(nt), np.arange(rows), np.arange(w),
-                    indexing="ij",
-                )
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "t": (tt.ravel() + t_off).astype(np.int32),
-                            "j": (jj.ravel() + j_off).astype(np.int32),
-                            "i": (ii.ravel() + i_off).astype(np.int32),
-                            "value": data.ravel(),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    df = binf.select("content").mapInPandas(decode, ZARR_PIXEL_SCHEMA)
-    if bbox_ij is not None:
-        i0, j0, i1, j1 = bbox_ij
-        df = df.filter(
-            (F.col("i") >= i0) & (F.col("i") < i1)
-            & (F.col("j") >= j0) & (F.col("j") < j1)
-        )
-    return df
+    return read_granules(spark, path, var_name, bbox_ij, decode_cf,
+                         decode_hdf5, _GRANULE_SUFFIXES)
 
 
 # ------------------------------------------------------------------ #
@@ -2135,50 +2054,33 @@ def read_hdf5_table(
     write-side dict (it fixes the Spark schema without a driver-side
     file peek); members present in the file but absent from
     ``columns`` are ignored, missing ones raise.  Decoding is the
-    same distributed binaryFile + ``mapInPandas`` shape as
-    :func:`read_hdf5`."""
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f) for f in os.listdir(path)
-            if f.endswith((".h5", ".nc", ".nc4"))
-        )
-    else:
-        files = [path]
+    same keyed granule fetch as :func:`read_hdf5`."""
+    store, keys = list_granules(path, _GRANULE_SUFFIXES)
     schema = T.StructType(
         [_table_spark_field(c, d) for c, d in columns.items()])
-    if not files:
-        return spark.createDataFrame([], schema=schema)
-    binf = spark.read.format("binaryFile").load(files)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for content in pdf["content"]:
-                parsed = decode_hdf5(bytes(content))
-                var = parsed["vars"].get(var_name)
-                if var is None:
-                    continue
-                rec = var["data"]
-                if rec.dtype.names is None:
-                    raise ValueError(
-                        f"dataset {var_name} is not a compound table")
-                cols = {}
-                for c, d in columns.items():
-                    if c not in rec.dtype.names:
-                        raise ValueError(
-                            f"member {c!r} missing from table "
-                            f"(has {rec.dtype.names})")
-                    v = rec[c]
-                    if np.dtype(d).kind == "S":
-                        cols[c] = [
-                            b.split(b"\x00")[0].decode(
-                                "utf-8", errors="replace")
-                            for b in v.tolist()
-                        ]
-                    else:
-                        cols[c] = v
-                outs.append(pd.DataFrame(cols))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+    def fetch_one(key: str) -> pd.DataFrame | None:
+        var = decode_hdf5(store.get(key))["vars"].get(var_name)
+        if var is None:
+            return None
+        rec = var["data"]
+        if rec.dtype.names is None:
+            raise ValueError(
+                f"dataset {var_name} is not a compound table")
+        cols = {}
+        for c, d in columns.items():
+            if c not in rec.dtype.names:
+                raise ValueError(
+                    f"member {c!r} missing from table "
+                    f"(has {rec.dtype.names})")
+            v = rec[c]
+            if np.dtype(d).kind == "S":
+                cols[c] = [
+                    b.split(b"\x00")[0].decode("utf-8", errors="replace")
+                    for b in v.tolist()
+                ]
+            else:
+                cols[c] = v
+        return pd.DataFrame(cols)
 
-    return binf.select("content").mapInPandas(decode, schema)
+    return fetch_chunks(spark, keys, fetch_one, schema=schema)

@@ -13,13 +13,16 @@ is needed -- ``struct`` + numpy parse it completely.
 Spark-first mapping:
 
 * read: real NetCDF archives are many granule FILES (one per orbit /
-  tile / day), which is exactly Spark's unit of parallelism -- each
-  file is listed into ``spark.read.format("binaryFile")`` and decoded
+  tile / day), which is exactly Spark's unit of parallelism -- the
+  driver lists the granule names (band-pruned under a window), and
+  executors fetch each file by key through ``FsChunkPut`` and decode it
   in ``mapInPandas`` (header parse + ``np.frombuffer``), emitting
-  long-format (t, j, i, value) pixel rows.  Granule offsets come from
-  the ``j_offset`` / ``i_offset`` / ``t_offset`` global attributes when
-  present, so a directory of granules reassembles into one grid without
-  any shuffle.
+  long-format (t, j, i, value) pixel rows: the zarr reader's keyed
+  fetch (``zarr.fetch_chunks``), shared with the HDF5 reader through
+  :func:`read_granules`.  Granule offsets come from the ``j_offset`` /
+  ``i_offset`` / ``t_offset`` global attributes when present, so a
+  directory of granules reassembles into one grid without any
+  shuffle.
 * write: pixels are grouped into row-band granules with
   ``applyInPandas``; every executor task assembles and writes ONE
   independent .nc file through the pluggable ``ChunkPut`` seam
@@ -39,9 +42,10 @@ sentinel is inferred from the file length).
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import struct
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -50,7 +54,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xcube_resampling_spark.sources.zarr import (
-    ZARR_PIXEL_SCHEMA, ChunkPut, FsChunkPut,
+    ChunkPut,
+    FsChunkPut,
+    block_pixels,
+    cf_decode,
+    clip_pixels_by_ij_bbox,
+    fetch_chunks,
 )
 
 _NC_DIMENSION = 0x0A
@@ -449,11 +458,89 @@ def write_netcdf3(
     # tiny driver-side manifest so readers can cheaply discover the grid
     put.put(
         "_meta.json",
-        __import__("json").dumps(
+        json.dumps(
             {"var": var_name, "shape": list(shape),
              "band_rows": band_rows, "n_bands": n_bands}
         ).encode(),
     )
+
+
+# write_netcdf3 / write_hdf5 name their granules part-<band>.<suffix>
+_PART_BAND = re.compile(r"part-(\d+)\.")
+
+
+def list_granules(
+    path: str,
+    suffixes: tuple[str, ...],
+    var_name: str | None = None,
+    bbox_ij: tuple[int, int, int, int] | None = None,
+) -> tuple[FsChunkPut, list[str]]:
+    """Driver-side granule listing: ``(store, keys)`` for a granule
+    directory (its files ending in ``suffixes``, sorted) or for one
+    file (``FsChunkPut`` over its directory plus its basename).  The
+    root is made absolute here, on the driver: executors open the
+    files, and their cwd need not match the driver's.
+
+    Under ``bbox_ij`` a directory with a ``_meta.json`` manifest for
+    ``var_name`` keeps only the ``part-<band>.*`` granules whose row
+    band intersects the window (band arithmetic, no data touched);
+    files with any other name are kept."""
+    path = os.path.abspath(path)
+    if not os.path.isdir(path):
+        if not os.path.isfile(path):
+            raise FileNotFoundError(path)
+        return FsChunkPut(os.path.dirname(path)), [os.path.basename(path)]
+    keys = sorted(f for f in os.listdir(path) if f.endswith(suffixes))
+    meta_path = os.path.join(path, "_meta.json")
+    if bbox_ij is not None and os.path.exists(meta_path):
+        with open(meta_path) as fp:
+            meta = json.load(fp)
+        if meta.get("var") == var_name:
+            br = int(meta["band_rows"])
+            _, j0, _, j1 = bbox_ij
+            keep = range(max(0, j0 // br), -(-j1 // br))
+            bands = {k: _PART_BAND.match(k) for k in keys}
+            keys = [k for k, m in bands.items()
+                    if m is None or int(m.group(1)) in keep]
+    return FsChunkPut(path), keys
+
+
+def read_granules(
+    spark: SparkSession,
+    path: str,
+    var_name: str,
+    bbox_ij: tuple[int, int, int, int] | None,
+    decode_cf: bool,
+    decode,
+    suffixes: tuple[str, ...],
+) -> DataFrame:
+    """The granule reader behind :func:`read_netcdf3` and
+    ``hdf5.read_hdf5``: granules listed by :func:`list_granules` are
+    fetched by key and decoded on executors; ``decode(bytes)`` parses
+    one file into ``{"attrs": ..., "vars": {name: {"data", "attrs"}}}``.
+    Granules without ``var_name`` contribute no rows."""
+    store, keys = list_granules(path, suffixes, var_name, bbox_ij)
+
+    def fetch_one(key: str) -> pd.DataFrame | None:
+        parsed = decode(store.get(key))
+        var = parsed["vars"].get(var_name)
+        if var is None:
+            return None
+        data = var["data"]
+        if data.ndim == 2:
+            data = data[np.newaxis]
+        elif data.ndim != 3:
+            raise ValueError(f"variable {var_name} must be 2-D or 3-D")
+        data = data.astype(np.float64)
+        if decode_cf:
+            data = cf_decode(data, var["attrs"])
+        ga = parsed["attrs"]
+        return block_pixels(data, int(ga.get("t_offset", 0)),
+                            int(ga.get("j_offset", 0)),
+                            int(ga.get("i_offset", 0)))
+
+    df = fetch_chunks(spark, keys, fetch_one)
+    return df if bbox_ij is None else clip_pixels_by_ij_bbox(df, bbox_ij)
 
 
 def read_netcdf3(
@@ -465,99 +552,17 @@ def read_netcdf3(
 ) -> DataFrame:
     """Read a .nc file or a granule directory as (t, j, i, value) rows.
 
-    For granule directories with a ``_meta.json`` manifest, ``bbox_ij``
-    prunes whole granule FILES driver-side (band arithmetic, no data
-    touched) before the binaryFile listing -- the NetCDF analogue of the
-    zarr chunk pruning; rows are then filtered to the exact window.
+    The driver lists the directory's ``.nc`` granules and executors
+    fetch and decode them by key (:func:`read_granules`): no file
+    listing job and no shuffle.  For granule directories with a
+    ``_meta.json`` manifest, ``bbox_ij`` prunes whole ``part-<band>``
+    granules driver-side (band arithmetic, no data touched) -- the
+    NetCDF analogue of the zarr chunk pruning; rows are then filtered
+    to the exact window.
 
     ``decode_cf=True`` applies the variable's CF packing attributes
     (``_FillValue``/``missing_value`` -> NaN, then ``scale_factor`` /
     ``add_offset``) exactly like the zarr reader and xarray.
     """
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f) for f in os.listdir(path)
-            if f.endswith(".nc")
-        )
-        meta_path = os.path.join(path, "_meta.json")
-        if bbox_ij is not None and os.path.exists(meta_path):
-            meta = __import__("json").load(open(meta_path))
-            if meta.get("var") == var_name:
-                br = int(meta["band_rows"])
-                _, j0, _, j1 = bbox_ij
-                keep = range(max(0, j0 // br), -(-j1 // br))
-                # part files are f"part-{band:05d}.nc"; parse the index by
-                # splitting (a fixed-width slice truncates band >= 100000)
-                files = [
-                    f for f in files
-                    if int(
-                        os.path.basename(f).split("-")[1].split(".")[0]
-                    ) in keep
-                ]
-    else:
-        files = [path]
-    if not files:
-        return spark.createDataFrame([], schema=ZARR_PIXEL_SCHEMA)
-    binf = spark.read.format("binaryFile").load(files)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for content in pdf["content"]:
-                parsed = decode_netcdf3(bytes(content))
-                var = parsed["vars"].get(var_name)
-                if var is None:
-                    continue
-                data = var["data"]
-                if data.ndim == 2:
-                    data = data[np.newaxis]
-                elif data.ndim != 3:
-                    raise ValueError(
-                        f"variable {var_name} must be 2-D or 3-D"
-                    )
-                data = data.astype(np.float64)
-                if decode_cf:
-                    va = var["attrs"]
-                    fill = va.get("_FillValue", va.get("missing_value"))
-                    if fill is not None:
-                        # CF allows vector-valued missing_value; the attr
-                        # reader returns a list for multi-element attrs
-                        if isinstance(fill, (list, tuple)):
-                            fills = [float(f) for f in fill]
-                        else:
-                            fills = [float(fill)]
-                        mask = np.isin(data, fills)
-                        data = np.where(mask, np.nan, data)
-                    data = (
-                        data * float(va.get("scale_factor", 1.0))
-                        + float(va.get("add_offset", 0.0))
-                    )
-                nt, rows, w = data.shape
-                j_off = int(parsed["attrs"].get("j_offset", 0))
-                i_off = int(parsed["attrs"].get("i_offset", 0))
-                t_off = int(parsed["attrs"].get("t_offset", 0))
-                tt, jj, ii = np.meshgrid(
-                    np.arange(nt), np.arange(rows), np.arange(w),
-                    indexing="ij",
-                )
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "t": (tt.ravel() + t_off).astype(np.int32),
-                            "j": (jj.ravel() + j_off).astype(np.int32),
-                            "i": (ii.ravel() + i_off).astype(np.int32),
-                            "value": data.ravel(),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    df = binf.select("content").mapInPandas(decode, ZARR_PIXEL_SCHEMA)
-    if bbox_ij is not None:
-        i0, j0, i1, j1 = bbox_ij
-        df = df.filter(
-            (F.col("i") >= i0) & (F.col("i") < i1)
-            & (F.col("j") >= j0) & (F.col("j") < j1)
-        )
-    return df
+    return read_granules(spark, path, var_name, bbox_ij, decode_cf,
+                         decode_netcdf3, (".nc",))

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xcube_resampling_spark.dataset import PIXEL_SCHEMA
 from xcube_resampling_spark.sources import (
     blosc1,
     lz4,
@@ -269,14 +270,133 @@ class FlatKVChunkPut(ChunkPut):
         return out
 
 
-ZARR_PIXEL_SCHEMA = T.StructType(
-    [
-        T.StructField("t", T.IntegerType(), False),
-        T.StructField("j", T.IntegerType(), False),
-        T.StructField("i", T.IntegerType(), False),
-        T.StructField("value", T.DoubleType(), True),
-    ]
-)
+# the (t, j, i, value) rows every chunked reader emits
+ZARR_PIXEL_SCHEMA = PIXEL_SCHEMA
+
+
+def fetch_chunks(
+    spark: SparkSession,
+    tasks: list,
+    fetch_one,
+    n_partitions: int | None = None,
+    schema: T.StructType = ZARR_PIXEL_SCHEMA,
+) -> DataFrame:
+    """The keyed chunk fetch every chunked reader runs on: ``tasks`` is
+    the driver's pruned list of chunk keys (any picklable items), and
+    ``fetch_one(task)`` fetches and decodes one of them on an executor,
+    returning its rows as one pandas frame (``None`` for a chunk that
+    is not stored).
+
+    Each task enters as its index into ``tasks`` (shipped with the
+    closure), spread over ``spark.range`` partitions: no file listing,
+    no exchange, and no Python-side source for the rows (a parallelized
+    key list decodes ~25% slower).  ``n_partitions`` overrides the
+    fan-out (default: the session's defaultParallelism, capped at the
+    task count)."""
+    if not tasks:
+        return spark.createDataFrame([], schema=schema)
+    n_part = max(1, min(
+        len(tasks),
+        n_partitions if n_partitions is not None
+        else spark.sparkContext.defaultParallelism))
+
+    def fetch(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        # one output batch per chunk: a task holds one decoded chunk at
+        # a time, however many keys its partition carries
+        for pdf in batches:
+            for k in pdf["id"]:
+                out = fetch_one(tasks[k])
+                if out is not None:
+                    yield out
+
+    return spark.range(len(tasks), numPartitions=n_part).mapInPandas(
+        fetch, schema)
+
+
+def stored_keys(store: ChunkPut, var_name: str,
+                keys: list[str]) -> list[str]:
+    """Driver-side pruning of candidate chunk keys (relative to the
+    array ``var_name``) to the ones the store holds: a file check for a
+    filesystem store, the store's key listing when it has one (the zip
+    central directory / object-store LIST); otherwise every candidate
+    gets a distributed GET and misses drop out."""
+    if isinstance(store, FsChunkPut):
+        adir = os.path.join(store.root, var_name)
+        return [k for k in keys if os.path.exists(os.path.join(adir, k))]
+    known = getattr(store, "known_keys", None)
+    if not callable(known):
+        return keys
+    have = set(known())
+    return [k for k in keys if f"{var_name}/{k}" in have]
+
+
+def window_chunk_ranges(
+    bbox_ij: tuple[int, int, int, int] | None,
+    h: int, w: int, ct_j: int, ct_i: int,
+) -> tuple[range, range]:
+    """Chunk-row and chunk-column index ranges of an (h, w) grid in
+    (ct_j, ct_i) chunks that intersect the half-open window ``bbox_ij``
+    = (i_min, j_min, i_max, j_max); every chunk without a window.
+    Driver-side arithmetic only: chunk pruning touches no data."""
+    n_kj, n_ki = -(-h // ct_j), -(-w // ct_i)
+    if bbox_ij is None:
+        return range(n_kj), range(n_ki)
+    i0, j0, i1, j1 = bbox_ij
+    return (range(max(0, j0 // ct_j), min(n_kj, -(-j1 // ct_j))),
+            range(max(0, i0 // ct_i), min(n_ki, -(-i1 // ct_i))))
+
+
+def block_pixels(block: np.ndarray, t_off: int, j_off: int,
+                 i_off: int) -> pd.DataFrame:
+    """A dense (vt, vj, vi) float64 block at grid offset (t_off, j_off,
+    i_off) -> long (t, j, i, value) rows."""
+    vt, vj, vi = block.shape
+    tt, jj, ii = np.meshgrid(
+        np.arange(vt), np.arange(vj), np.arange(vi),
+        indexing="ij",
+    )
+    return pd.DataFrame(
+        {
+            "t": (tt.ravel() + t_off).astype(np.int32),
+            "j": (jj.ravel() + j_off).astype(np.int32),
+            "i": (ii.ravel() + i_off).astype(np.int32),
+            "value": block.ravel(),
+        }
+    )
+
+
+def cf_decode(block: np.ndarray, attrs: dict) -> np.ndarray:
+    """Apply CF packing attributes the way xarray's ``decode_cf`` does:
+    values equal to ``_FillValue`` (or ``missing_value``; CF allows a
+    list) become NaN, then ``value * scale_factor + add_offset`` (each
+    only when present)."""
+    fill = attrs.get("_FillValue", attrs.get("missing_value"))
+    if fill is not None:
+        fills = ([float(f) for f in fill]
+                 if isinstance(fill, (list, tuple)) else [float(fill)])
+        block = np.where(np.isin(block, fills), np.nan, block)
+    if "scale_factor" in attrs:
+        block = block * float(attrs["scale_factor"])
+    if "add_offset" in attrs:
+        block = block + float(attrs["add_offset"])
+    return block
+
+
+def clip_pixels_by_ij_bbox(df: DataFrame, ij_bbox) -> DataFrame:
+    """Half-open (i_min, j_min, i_max, j_max) range predicate on pixel
+    indices (parity with reference utils.py:77-124 coordinate
+    clipping); readers apply it after chunk pruning to cut the edge
+    chunks to the exact window."""
+    i_min, j_min, i_max, j_max = ij_bbox
+    return df.filter(
+        (F.col("i") >= i_min)
+        & (F.col("i") < i_max)
+        & (F.col("j") >= j_min)
+        & (F.col("j") < j_max)
+    )
+
 
 def _np_dtype(dtype_s: str) -> np.dtype:
     """Numeric zarr v2 dtype string -> numpy dtype (both byte orders,
@@ -448,20 +568,22 @@ def _write_zarr_metadata(
     )
 
 
-def _write_zarr_chunks(
+def write_chunks(
     df: DataFrame,
     put: ChunkPut,
     var_name: str,
     shape: tuple[int, ...],
     chunks: tuple[int, ...],
     fill_value: float,
-    compressor: str,
-    filters: list | None = None,
+    encode_chunk,
 ) -> None:
-    """Distributed chunk-file write: one applyInPandas task per chunk,
-    all bytes through ``put``."""
-    nd = len(shape)
-    if nd == 2:
+    """Distributed chunk write shared by the zarr v2 and v3 sinks: one
+    ``applyInPandas`` task per chunk fills a dense block (``fill_value``
+    where no pixel lands), and ``encode_chunk(block, kt, kj, ki)``
+    returns its store-relative ``(key, bytes)``, written through
+    ``put`` under ``var_name``.  ``shape``/``chunks`` are (nt, h, w)
+    or (h, w); 2-D arrays take their pixels from t == 0."""
+    if len(shape) == 2:
         ct_j, ct_i = chunks
         ct_t = 1
         src = df.filter(F.col("t") == 0)
@@ -485,6 +607,30 @@ def _write_zarr_chunks(
         jj = pdf["j"].to_numpy(np.int64) - kj * ct_j
         ii = pdf["i"].to_numpy(np.int64) - ki * ct_i
         block[tt, jj, ii] = pdf["value"].to_numpy(np.float64)
+        name, raw = encode_chunk(block, kt, kj, ki)
+        put.put(f"{var_name}/{name}", raw)
+        return pd.DataFrame({"key": [name]})
+
+    # one task per chunk; the action drives the distributed write
+    keyed.groupBy("ck_t", "ck_j", "ck_i").applyInPandas(
+        write_chunk, out_schema
+    ).count()
+
+
+def _write_zarr_chunks(
+    df: DataFrame,
+    put: ChunkPut,
+    var_name: str,
+    shape: tuple[int, ...],
+    chunks: tuple[int, ...],
+    fill_value: float,
+    compressor: str,
+    filters: list | None = None,
+) -> None:
+    """Distributed zarr v2 chunk-file write through ``put``."""
+    nd = len(shape)
+
+    def encode_chunk(block, kt, kj, ki):
         raw = block.tobytes(order="C")
         raw = numcodecs_filters.encode_filters(raw, filters)
         if compressor == "zlib":
@@ -498,16 +644,10 @@ def _write_zarr_chunks(
             raw = lz4.compress_framed(raw)
         elif compressor == "zstd":
             raw = zstd.compress(raw)
-        name = (
-            f"{kj}.{ki}" if nd == 2 else f"{kt}.{kj}.{ki}"
-        )
-        put.put(f"{var_name}/{name}", raw)
-        return pd.DataFrame({"key": [name]})
+        return (f"{kj}.{ki}" if nd == 2 else f"{kt}.{kj}.{ki}"), raw
 
-    # one task per chunk; the action drives the distributed write
-    keyed.groupBy("ck_t", "ck_j", "ck_i").applyInPandas(
-        write_chunk, out_schema
-    ).count()
+    write_chunks(df, put, var_name, shape, chunks, fill_value,
+                 encode_chunk)
 
 
 def _get_json(put: ChunkPut, path: str, key: str):
@@ -1136,16 +1276,6 @@ def read_zarr(
     comp = _check_compressor(meta)
     dtype_s = meta["dtype"]
     dtype = _np_dtype(dtype_s)
-    fill_attr = attrs.get("_FillValue", attrs.get("missing_value"))
-    # CF allows vector-valued missing_value -> normalize to a float list
-    if fill_attr is None:
-        fill_values: list[float] | None = None
-    elif isinstance(fill_attr, (list, tuple)):
-        fill_values = [float(f) for f in fill_attr]
-    else:
-        fill_values = [float(fill_attr)]
-    scale = float(attrs.get("scale_factor", 1.0))
-    offset = float(attrs.get("add_offset", 0.0))
     shape = tuple(int(s) for s in meta["shape"])
     chunks = tuple(int(c) for c in meta["chunks"])
     nd = len(shape)
@@ -1155,15 +1285,7 @@ def read_zarr(
     nt, h, w = shape
     ct_t, ct_j, ct_i = chunks
     n_kt = -(-nt // ct_t)
-    n_kj = -(-h // ct_j)
-    n_ki = -(-w // ct_i)
-
-    if bbox_ij is not None:
-        i0, j0, i1, j1 = bbox_ij
-        kj_r = range(max(0, j0 // ct_j), min(n_kj, -(-j1 // ct_j)))
-        ki_r = range(max(0, i0 // ct_i), min(n_ki, -(-i1 // ct_i)))
-    else:
-        kj_r, ki_r = range(n_kj), range(n_ki)
+    kj_r, ki_r = window_chunk_ranges(bbox_ij, h, w, ct_j, ct_i)
     names = [
         f"{kj}.{ki}" if nd == 2 else f"{kt}.{kj}.{ki}"
         for kt in range(n_kt)
@@ -1188,62 +1310,16 @@ def read_zarr(
         vi = min(ct_i, w - i_off)
         block = block[:vt, :vj, :vi].astype(np.float64)
         if decode_cf:
-            if fill_values is not None:
-                block = np.where(
-                    np.isin(block, fill_values), np.nan, block
-                )
-            block = block * scale + offset
-        tt, jj, ii = np.meshgrid(
-            np.arange(vt), np.arange(vj), np.arange(vi),
-            indexing="ij",
-        )
-        return pd.DataFrame(
-            {
-                "t": (tt.ravel() + t_off).astype(np.int32),
-                "j": (jj.ravel() + j_off).astype(np.int32),
-                "i": (ii.ravel() + i_off).astype(np.int32),
-                "value": block.ravel(),
-            }
-        )
+            block = cf_decode(block, attrs)
+        return block_pixels(block, t_off, j_off, i_off)
 
     if store is None:
         store = FsChunkPut(os.path.abspath(path))
-        names = [n for n in names if os.path.exists(os.path.join(adir, n))]
-    else:
-        # prune against the store's key listing when it has one (the
-        # zip central directory / object-store LIST); otherwise every
-        # candidate key gets a distributed GET and misses drop out
-        known = getattr(store, "known_keys", None)
-        if callable(known):
-            have = set(known())
-            names = [n for n in names if f"{var_name}/{n}" in have]
-    if not names:
-        return spark.createDataFrame([], schema=ZARR_PIXEL_SCHEMA)
-    n_part = max(1, min(
-        len(names),
-        n_partitions if n_partitions is not None
-        else spark.sparkContext.defaultParallelism))
+    names = stored_keys(store, var_name, names)
 
-    def fetch(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        # one output batch per chunk: a task holds one decoded chunk at
-        # a time, however many keys its partition carries
-        for pdf in batches:
-            for k in pdf["id"]:
-                raw = store.get(f"{var_name}/{names[k]}")
-                if raw is not None:
-                    yield decode_block(names[k], bytes(raw))
+    def fetch_one(name: str) -> pd.DataFrame | None:
+        raw = store.get(f"{var_name}/{name}")
+        return None if raw is None else decode_block(name, bytes(raw))
 
-    # each key enters as its index into ``names`` (shipped with the
-    # closure): no file listing, no exchange, and no Python-side source
-    # for the rows (a parallelized key list decodes ~25% slower)
-    df = spark.range(len(names), numPartitions=n_part).mapInPandas(
-        fetch, ZARR_PIXEL_SCHEMA)
-    if bbox_ij is not None:
-        i0, j0, i1, j1 = bbox_ij
-        df = df.filter(
-            (F.col("i") >= i0) & (F.col("i") < i1)
-            & (F.col("j") >= j0) & (F.col("j") < j1)
-        )
-    return df
+    df = fetch_chunks(spark, names, fetch_one, n_partitions)
+    return df if bbox_ij is None else clip_pixels_by_ij_bbox(df, bbox_ij)

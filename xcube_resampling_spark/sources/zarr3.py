@@ -25,12 +25,14 @@ so real-world v3 stores now open), and/or ``crc32c``; plus the
 ``sharding_indexed`` codec (ZEP 2): whole shards of inner chunks with
 a crc32c'd offset index, read AND write (``shards=``).
 
-The Spark execution shape is identical to the v2 module (and shares
-its scale rationale): metadata is tiny driver-side JSON, chunk writes
-are one ``applyInPandas`` task per chunk through the pluggable
-``ChunkPut`` seam, reads enumerate only window-intersecting chunk
-files into a ``binaryFile`` scan (chunk pruning = partition pruning)
-and decode in ``mapInPandas``.
+The Spark execution shape is the v2 module's, through its shared
+pieces: metadata is tiny driver-side JSON, chunk writes are one
+``applyInPandas`` task per chunk through the pluggable ``ChunkPut``
+seam (``zarr.write_chunks``), and reads enumerate only the stored,
+window-intersecting chunk keys on the driver (chunk pruning =
+partition pruning) and fetch and decode them by key in
+``mapInPandas`` (``zarr.fetch_chunks``), from a filesystem store and
+a chunk store alike.
 """
 
 from __future__ import annotations
@@ -39,18 +41,22 @@ import gzip as _gzip
 import json
 import os
 import struct
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from xcube_resampling_spark.sources import blosc1, zstd
 from xcube_resampling_spark.sources.zarr import (
     ChunkPut,
     FsChunkPut,
-    ZARR_PIXEL_SCHEMA,
+    block_pixels,
+    cf_decode,
+    clip_pixels_by_ij_bbox,
+    fetch_chunks,
+    stored_keys,
+    window_chunk_ranges,
+    write_chunks,
 )
 
 _V3_DTYPES = {
@@ -419,35 +425,6 @@ def _chunk_key(indices: tuple[int, ...], key_enc: dict) -> str:
     )
 
 
-def _indices_from_path(path: str, adir: str, key_enc: dict,
-                       nd: int) -> tuple[int, ...]:
-    rel = os.path.relpath(os.path.abspath(path), os.path.abspath(adir))
-    name = key_enc.get("name", "default")
-    sep = (key_enc.get("configuration") or {}).get(
-        "separator", "/" if name == "default" else "."
-    )
-    if name == "default":
-        rel = rel.replace(os.sep, sep)
-        parts = rel.split(sep)
-        if parts and parts[0] == "c":
-            parts = parts[1:]
-    else:
-        # v2 encoding: separator '.' keeps the key in one basename;
-        # separator '/' nests the key as directories -- split the whole
-        # array-relative path either way
-        rel2 = rel.replace(os.sep, sep) if sep == "/" else rel
-        parts = rel2.split(sep) if sep == "/" \
-            else os.path.basename(rel2).split(sep)
-    idx = tuple(int(p) for p in parts)
-    if len(idx) != nd:
-        raise ValueError(f"chunk key '{rel}' does not match rank {nd}")
-    return idx
-
-
-def is_zarr3_array(path: str, var_name: str) -> bool:
-    return os.path.exists(os.path.join(path, var_name, "zarr.json"))
-
-
 def _write_zarr3_metadata(
     put: ChunkPut,
     var_name: str,
@@ -555,26 +532,11 @@ def _write_zarr3_chunks(
     codecs: list[dict],
     key_enc: dict,
 ) -> None:
-    """Distributed chunk write: one applyInPandas task per chunk
+    """Distributed zarr v3 chunk write: one applyInPandas task per chunk
     (per SHARD when the chain is ``sharding_indexed`` -- ``chunks``
     is then the shard/grid shape and the inner layout comes from the
     codec configuration)."""
     nd = len(shape)
-    if nd == 2:
-        ct_j, ct_i = chunks
-        ct_t = 1
-        src = df.filter(F.col("t") == 0)
-    else:
-        ct_t, ct_j, ct_i = chunks
-        src = df
-    keyed = src.select(
-        (F.col("t") / ct_t).cast("int").alias("ck_t"),
-        (F.col("j") / ct_j).cast("int").alias("ck_j"),
-        (F.col("i") / ct_i).cast("int").alias("ck_i"),
-        "t", "j", "i", "value",
-    )
-    fill = float(fill_value)
-    chunk_shape = (ct_t, ct_j, ct_i)
     if codecs and codecs[0].get("name") == "sharding_indexed":
         cfg = codecs[0]["configuration"]
         inner = tuple(int(c) for c in cfg["chunk_shape"])
@@ -584,27 +546,17 @@ def _write_zarr3_chunks(
     else:
         bb_codecs = codecs[1:]
         shard_inner = None
-    out_schema = "key string"
 
-    def write_chunk(key, pdf):
-        kt, kj, ki = int(key[0]), int(key[1]), int(key[2])
-        block = np.full(chunk_shape, fill, dtype="<f8")
-        tt = pdf["t"].to_numpy(np.int64) - kt * ct_t
-        jj = pdf["j"].to_numpy(np.int64) - kj * ct_j
-        ii = pdf["i"].to_numpy(np.int64) - ki * ct_i
-        block[tt, jj, ii] = pdf["value"].to_numpy(np.float64)
+    def encode_chunk(block, kt, kj, ki):
         if shard_inner is not None:
             raw = _encode_shard(block, shard_inner, bb_codecs)
         else:
             raw = _encode_chain(block.tobytes(order="C"), bb_codecs, 8)
         indices = (kj, ki) if nd == 2 else (kt, kj, ki)
-        k = _chunk_key(indices, key_enc)
-        put.put(f"{var_name}/{k}", raw)
-        return pd.DataFrame({"key": [k]})
+        return _chunk_key(indices, key_enc), raw
 
-    keyed.groupBy("ck_t", "ck_j", "ck_i").applyInPandas(
-        write_chunk, out_schema
-    ).count()
+    write_chunks(df, put, var_name, shape, chunks, fill_value,
+                 encode_chunk)
 
 
 def write_zarr3(
@@ -981,29 +933,27 @@ def read_zarr3(
 ) -> DataFrame:
     """Read a zarr v3 array as a (t, j, i, value) pixel DataFrame.
 
-    Same contract as ``zarr.read_zarr`` (the v2 reader): ``bbox_ij``
-    prunes chunk FILES driver-side before the binaryFile scan;
-    ``decode_cf=True`` applies ``_FillValue``/``missing_value`` ->
-    NaN then ``scale_factor``/``add_offset`` from the array's
-    ``attributes``.  ``store`` reads through a non-filesystem chunk
-    store (ZipChunkStore / FlatKVChunkPut / any ChunkPut with ``get``):
-    metadata driver-side, chunk GETs distributed over the pruned key
-    list (``path`` is ignored when given)."""
-    # absolutize ON THE DRIVER: executors receive absolute file: paths
-    # from binaryFile, and their cwd need not match the driver's, so a
-    # relative adir captured in the decode closure would mis-resolve
-    adir = os.path.abspath(os.path.join(path, var_name))
-    if store is not None:
-        raw_meta = store.get(f"{var_name}/zarr.json")
-        if raw_meta is None:
-            raise FileNotFoundError(
-                f"no {var_name}/zarr.json in the chunk store")
-        meta = json.loads(raw_meta)
-    else:
-        with open(os.path.join(adir, "zarr.json")) as fp:
-            meta = json.load(fp)
+    Same contract and the same keyed chunk fetch as ``zarr.read_zarr``
+    (the v2 reader): the driver enumerates the chunk keys under the
+    array's ``chunk_key_encoding``, keeps the window-intersecting ones
+    under ``bbox_ij`` and drops those that are not stored; executors
+    GET and decode them through the store (``FsChunkPut`` over
+    ``path`` for a filesystem store).  ``decode_cf=True`` applies
+    ``_FillValue``/``missing_value`` -> NaN then
+    ``scale_factor``/``add_offset`` from the array's ``attributes``.
+    ``store`` reads through a non-filesystem chunk store
+    (ZipChunkStore / FlatKVChunkPut / any ChunkPut with ``get``;
+    ``path`` is ignored when given)."""
+    if store is None:
+        # absolutize ON THE DRIVER: executors open the chunk files, and
+        # their cwd need not match the driver's
+        store = FsChunkPut(os.path.abspath(path))
+    raw_meta = store.get(f"{var_name}/zarr.json")
+    if raw_meta is None:
+        raise FileNotFoundError(f"no {var_name}/zarr.json in the store")
+    meta = json.loads(raw_meta)
     if meta.get("node_type") != "array" or meta.get("zarr_format") != 3:
-        raise ValueError(f"{adir}/zarr.json is not a zarr v3 array")
+        raise ValueError(f"{var_name}/zarr.json is not a zarr v3 array")
     grid = meta.get("chunk_grid", {})
     if grid.get("name") != "regular":
         raise NotImplementedError(
@@ -1037,15 +987,6 @@ def read_zarr3(
     store_fill = _fill_from_json(meta.get("fill_value", "NaN"), dtype)
     key_enc = meta.get("chunk_key_encoding", {"name": "default"})
     attrs = meta.get("attributes", {}) or {}
-    fill_attr = attrs.get("_FillValue", attrs.get("missing_value"))
-    if fill_attr is None:
-        fill_values: list[float] | None = None
-    elif isinstance(fill_attr, (list, tuple)):
-        fill_values = [float(f) for f in fill_attr]
-    else:
-        fill_values = [float(fill_attr)]
-    scale = float(attrs.get("scale_factor", 1.0))
-    offset = float(attrs.get("add_offset", 0.0))
 
     shape = tuple(int(s) for s in meta["shape"])
     chunks = tuple(int(c) for c in grid["configuration"]["chunk_shape"])
@@ -1069,15 +1010,7 @@ def read_zarr3(
     nt, h, w = shape3
     ct_t, ct_j, ct_i = chunks3
     n_kt = -(-nt // ct_t)
-    n_kj = -(-h // ct_j)
-    n_ki = -(-w // ct_i)
-
-    if bbox_ij is not None:
-        i0, j0, i1, j1 = bbox_ij
-        kj_r = range(max(0, j0 // ct_j), min(n_kj, -(-j1 // ct_j)))
-        ki_r = range(max(0, i0 // ct_i), min(n_ki, -(-i1 // ct_i)))
-    else:
-        kj_r, ki_r = range(n_kj), range(n_ki)
+    kj_r, ki_r = window_chunk_ranges(bbox_ij, h, w, ct_j, ct_i)
     key_idx = {
         _chunk_key((kj, ki) if nd == 2 else (kt, kj, ki), key_enc):
             (kt, kj, ki)
@@ -1085,6 +1018,7 @@ def read_zarr3(
         for kj in kj_r
         for ki in ki_r
     }
+    keys = stored_keys(store, var_name, list(key_idx))
 
     def decode_block(content: bytes, kt: int, kj: int,
                      ki: int) -> pd.DataFrame:
@@ -1117,91 +1051,13 @@ def read_zarr3(
         vi = min(ct_i, w - i_off)
         block = block[:vt, :vj, :vi].astype(np.float64)
         if decode_cf:
-            if fill_values is not None:
-                block = np.where(
-                    np.isin(block, fill_values), np.nan, block
-                )
-            block = block * scale + offset
-        tt, jj, ii = np.meshgrid(
-            np.arange(vt), np.arange(vj), np.arange(vi),
-            indexing="ij",
-        )
-        return pd.DataFrame(
-            {
-                "t": (tt.ravel() + t_off).astype(np.int32),
-                "j": (jj.ravel() + j_off).astype(np.int32),
-                "i": (ii.ravel() + i_off).astype(np.int32),
-                "value": block.ravel(),
-            }
-        )
+            block = cf_decode(block, attrs)
+        return block_pixels(block, t_off, j_off, i_off)
 
-    if store is not None:
-        known = getattr(store, "known_keys", None)
-        if callable(known):
-            have = set(known())
-            key_idx = {
-                k: v for k, v in key_idx.items()
-                if f"{var_name}/{k}" in have
-            }
-        if not key_idx:
-            return spark.createDataFrame([], schema=ZARR_PIXEL_SCHEMA)
-        n_part = max(1, min(
-            len(key_idx), spark.sparkContext.defaultParallelism))
-        keys_df = spark.createDataFrame(
-            [(k, kt, kj, ki) for k, (kt, kj, ki) in key_idx.items()],
-            "chunk string, kt int, kj int, ki int",
-        ).repartition(n_part)
+    def fetch_one(key: str) -> pd.DataFrame | None:
+        raw = store.get(f"{var_name}/{key}")
+        return (None if raw is None
+                else decode_block(bytes(raw), *key_idx[key]))
 
-        def fetch(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                outs = []
-                for key, kt, kj, ki in zip(
-                        pdf["chunk"], pdf["kt"], pdf["kj"], pdf["ki"]):
-                    raw = store.get(f"{var_name}/{key}")
-                    if raw is None:
-                        continue
-                    outs.append(
-                        decode_block(bytes(raw), int(kt), int(kj),
-                                     int(ki)))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        df = keys_df.mapInPandas(fetch, ZARR_PIXEL_SCHEMA)
-    else:
-        files = [
-            os.path.join(adir, k) for k in key_idx
-            if os.path.exists(os.path.join(adir, k))
-        ]
-        if not files:
-            return spark.createDataFrame([], schema=ZARR_PIXEL_SCHEMA)
-        binf = spark.read.format("binaryFile").load(files)
-
-        def decode(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                outs = []
-                for p, content in zip(pdf["path"], pdf["content"]):
-                    local = (p[len("file:"):] if p.startswith("file:")
-                             else p)
-                    idx = _indices_from_path(local, adir, key_enc, nd)
-                    if nd == 2:
-                        kt, kj, ki = 0, idx[0], idx[1]
-                    else:
-                        kt, kj, ki = idx
-                    outs.append(decode_block(bytes(content), kt, kj, ki))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        df = binf.select("path", "content").mapInPandas(
-            decode, ZARR_PIXEL_SCHEMA
-        )
-    if bbox_ij is not None:
-        i0, j0, i1, j1 = bbox_ij
-        df = df.filter(
-            (F.col("i") >= i0) & (F.col("i") < i1)
-            & (F.col("j") >= j0) & (F.col("j") < j1)
-        )
-    return df
+    df = fetch_chunks(spark, keys, fetch_one)
+    return df if bbox_ij is None else clip_pixels_by_ij_bbox(df, bbox_ij)
